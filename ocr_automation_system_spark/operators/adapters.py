@@ -2,10 +2,14 @@
 
 The reference adapters (`/root/reference/project/verification_engine/
 adapters/*`) are per-document dict projections; here each is a JVM-side
-column-expression projection over the extraction results — whole-stage
-codegen, no Python. These columns are join keys and comparison values, not
-golden text, so [B] expressions are allowed (SURVEY.md §7 byte-identity
-rule: golden-affecting transforms stay in Python UDFs; keys/metrics go JVM).
+projection over the extraction results — whole-stage codegen, no Python.
+The projections are Spark SQL text (``sqltext``): each reaches the JVM in
+one ``selectExpr`` call, where the former ``Column`` trees cost a py4j
+round trip per ``F.*`` call — ~5k of them and ~1.2-1.4 s of driver time
+for ``build_entities`` on a 4-vCPU VM, now ~130 and ~0.2-0.3 s. These columns are join keys and
+comparison values, not golden text, so [B] expressions are allowed
+(SURVEY.md §7 byte-identity rule: golden-affecting transforms stay in
+Python UDFs; keys/metrics go JVM).
 
 The entity builder (A8, `engine.py:47-71`) becomes a real 3-way full-outer
 join on the normalized PAN key — the reference holds exactly one entity in
@@ -15,11 +19,13 @@ memory, so its "join" is implicit; at 10^12 rows this is shuffle boundary #1
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BooleanType, DoubleType, StringType, StructField, StructType,
+    ArrayType, DoubleType, StringType, StructField, StructType,
 )
+
+from .sqltext import case, contains_any, nz, sql_str
 
 # -- from_json schemas for the per-doctype fields_json / tables_json ----------
 
@@ -84,189 +90,187 @@ PAN_FIELDS_SCHEMA = StructType([
 ])
 
 
-# -- A1-A3: scalar normalizers (column expressions) ---------------------------
+# -- A1-A4: scalar normalizers (SQL fragments) --------------------------------
 
-def normalize_name(col: Column) -> Column:
+def name_sql(x: str) -> str:
     """A1 (`base_adapter.py:44-69`): upper, strip M/S|MESSRS|SHRI|SMT
     prefixes, strip non-[A-Z0-9 ], collapse spaces — the join-key
     canonicalization for name matching."""
-    c = F.upper(F.trim(col))
-    c = F.regexp_replace(c, r"^(M/S\.?\s*|MESSRS\.?\s*|SHRI\s+|SMT\.?\s*)", "")
-    c = F.regexp_replace(c, r"[^A-Z0-9 ]", "")
-    return F.trim(F.regexp_replace(c, r"\s+", " "))
+    out = f"upper(trim({x}))"
+    for pattern, repl in (
+        (r"^(M/S\.?\s*|MESSRS\.?\s*|SHRI\s+|SMT\.?\s*)", ""),
+        (r"[^A-Z0-9 ]", ""),
+        (r"\s+", " "),
+    ):
+        out = f"regexp_replace({out}, {sql_str(pattern)}, {sql_str(repl)})"
+    return f"trim({out})"
 
 
-def normalize_pan(col: Column) -> Column:
+def pan_sql(x: str) -> str:
     """A2 (`base_adapter.py:71-76`)."""
-    return F.upper(F.trim(col))
+    return f"upper(trim({x}))"
 
 
-def normalize_date(col: Column) -> Column:
+def date_sql(x: str) -> str:
     """A3 (`base_adapter.py:78-90`): [-.] separators -> /."""
-    return F.regexp_replace(F.trim(col), r"[-.]", "/")
+    return f"regexp_replace(trim({x}), '[-.]', '/')"
 
 
-def _nz(col: Column) -> Column:
-    """'' for NULL — the adapters' missing-value convention."""
-    return F.coalesce(col, F.lit(""))
+def _first_nonempty(x: str) -> str:
+    """A4's value cleaning: upper(trim(x)), '' when NULL or blank."""
+    return f"coalesce(nullif(upper(trim({x})), ''), '')"
 
 
-def _first_nonempty(*cols: Column) -> Column:
-    """A4's alias resolution: first non-empty of a priority key list."""
-    return F.coalesce(*[F.nullif(F.upper(F.trim(c)), F.lit("")) for c in cols], F.lit(""))
-
-
-def normalized_address(flat, building, road, locality, city, district, state, pin) -> Column:
-    """A4 (`base_adapter.py:92-147`): canonical 8-key address struct +
-    synthesized full_address (concat_ws skips empties like the reference's
+def _join_nonempty(parts: list) -> str:
+    """``concat_ws(', ')`` over the non-empty parts (the reference's
     non-empty join)."""
-    fields = {
-        "flat_no": flat, "building": building, "road": road,
-        "locality": locality, "city": city, "district": district,
-        "state": state, "pin": pin,
-    }
-    cleaned = {k: _first_nonempty(v) for k, v in fields.items()}
-    full = F.concat_ws(", ", *[F.nullif(c, F.lit("")) for c in cleaned.values()])
-    return F.struct(*[c.alias(k) for k, c in cleaned.items()], full.alias("full_address"))
+    return "concat_ws(', ', " + ", ".join(f"nullif({p}, '')" for p in parts) + ")"
+
+
+# A4 canonical address keys, in struct order.
+_ADDRESS_KEYS = ("flat_no", "building", "road", "locality", "city",
+                 "district", "state", "pin")
+
+
+def address_sql(root: str, sources: tuple) -> str:
+    """A4 (`base_adapter.py:92-147`): canonical 8-key address struct +
+    synthesized full_address, from ``root``'s fields ``sources`` (one per
+    ``_ADDRESS_KEYS`` entry)."""
+    cleaned = [_first_nonempty(f"{root}.{src}") for src in sources]
+    fields = [f"'{k}', {c}" for k, c in zip(_ADDRESS_KEYS, cleaned)]
+    return (f"named_struct({', '.join(fields)}, "
+            f"'full_address', {_join_nonempty(cleaned)})")
+
+
+_CONSTITUTION_CHAIN = [
+    ("PRIVATE LIMITED", ["PRIVATE LIMITED", "PVT LTD", "PRIVATE LTD", "PRIVATE LIMITED COMPANY"]),
+    ("PUBLIC LIMITED", ["PUBLIC LIMITED", "PUBLIC LTD", "PUBLIC LIMITED COMPANY"]),
+    ("LLP", ["LLP", "LIMITED LIABILITY PARTNERSHIP"]),
+    ("PARTNERSHIP", ["PARTNERSHIP", "PARTNERSHIP FIRM"]),
+    ("PROPRIETORSHIP", ["PROPRIETORSHIP", "SOLE PROPRIETORSHIP", "PROPRIETOR"]),
+    ("HUF", ["HUF", "HINDU UNDIVIDED FAMILY"]),
+    ("TRUST", ["TRUST"]),
+    ("SOCIETY", ["SOCIETY"]),
+    ("AOP", ["AOP", "ASSOCIATION OF PERSONS"]),
+    ("BOI", ["BOI", "BODY OF INDIVIDUALS"]),
+]
+
+
+def constitution_sql(x: str) -> str:
+    """A-variant constitution normalization (P16, `base_adapter.py:150-179`):
+    10 canonical categories, input returned as-is when unmatched (distinct
+    from P15 which returns '')."""
+    up = f"upper(trim({x}))"
+    chain = case([(contains_any(up, variants), sql_str(canon))
+                  for canon, variants in _CONSTITUTION_CHAIN], up)
+    return case([(f"{x} IS NULL OR trim({x}) = ''", "''")], chain)
 
 
 # -- A5-A7: per-doctype normalized projections --------------------------------
+#
+# Each adapter is (doctype, parsed json columns, [(output column, sql)]);
+# the json columns are parsed once in a first projection, the output
+# columns read them in a second.
+
+_PAN = ("PAN", {"f": ("fields_json", PAN_FIELDS_SCHEMA)}, [
+    ("pan_url", "url"),
+    ("pan", pan_sql(nz("f.pan"))),
+    ("legal_name", name_sql(nz("f.name"))),
+    ("pan_type", nz("f.pan_type")),
+    ("incorporation_date", date_sql(nz("f.incorporation_date"))),
+    ("raw_name", nz("f.name")),
+])
+
+_GST = ("GST_CERTIFICATE", {"f": ("fields_json", GST_FIELDS_SCHEMA)}, [
+    ("gst_url", "url"),
+    ("legal_name", name_sql(nz("f.name"))),
+    ("gst_number", nz("f.gst_number")),
+    ("pan", f"upper(substring({nz('f.gst_number')}, 3, 10))"),
+    ("constitution", constitution_sql(nz("f.constitution_of_business"))),
+    ("raw_constitution", nz("f.constitution_of_business")),
+    ("principal_address", address_sql("f.principal_address", (
+        "building_flat_no", "premises_name", "road_street", "locality",
+        "city", "district", "state", "pin_code"))),
+    ("additional_places", nz("f.additional_place_of_business")),
+    ("total_additional_places",
+     "coalesce(nullif(f.total_no_of_additional_places, ''), '0')"),
+    ("raw_name", nz("f.name")),
+])
+
+# O1 — `_get_current_enterprise_type` (`udyam_adapter.py:85-99`): latest
+# classification_year wins. try_element_at: a doc whose classification
+# table didn't survive extraction (e.g. OCR-leg line drops) has an EMPTY
+# array — plain element_at would throw task-killing INVALID_ARRAY_INDEX,
+# violating the poison-row contract.
+_ENTERPRISE_TYPE = ("try_element_at(reverse(array_sort(t.classification_history)), 1)"
+                    ".enterprise_type")
+_FACTORY = ("named_struct("
+            "'unit_name', regexp_replace(trim(u.unit_name), " + sql_str(r"\s+") + ", ' '), "
+            f"'pin', upper(trim({nz('u.pin')})), "
+            "'full_address', " + _join_nonempty([
+                f"upper(trim(u.{k}))" for k in (
+                    "flat", "building", "road", "village_town", "district",
+                    "state", "pin")]) + ")")
+
+_UDYAM = ("UDYAM", {"f": ("fields_json", UDYAM_FIELDS_SCHEMA),
+                    "t": ("tables_json", UDYAM_TABLES_SCHEMA)}, [
+    ("udyam_url", "url"),
+    ("legal_name", name_sql(nz("f.enterprise_name"))),
+    ("pan", pan_sql(nz("f.pan"))),
+    ("udyam_number", nz("f.udyam_number")),
+    ("incorporation_date", date_sql(nz("f.incorporation_date"))),
+    ("commencement_date", date_sql(nz("f.commencement_date"))),
+    ("registered_address", address_sql("f.official_address", (
+        "flat_no", "building", "road", "village_town", "city", "district",
+        "state", "pin"))),
+    ("factory_addresses", f"coalesce(transform(t.units_details, u -> {_FACTORY}), array())"),
+    ("enterprise_type", nz(_ENTERPRISE_TYPE)),
+    ("mobile", nz("f.mobile")),
+    ("email", nz("f.email")),
+    ("raw_name", nz("f.enterprise_name")),
+])
+
+
+def _adapt(results: DataFrame, spec: tuple) -> DataFrame:
+    doctype, parsed, columns = spec
+    return (
+        results.where(f"document_type = {sql_str(doctype)}")
+        .selectExpr("url", *[f"from_json({src}, {sql_str(schema.json())}) AS {name}"
+                             for name, (src, schema) in parsed.items()])
+        .selectExpr(*[f"{sql} AS {name}" for name, sql in columns])
+    )
+
 
 def adapt_pan(results: DataFrame) -> DataFrame:
     """A5 (`pan_adapter.py:18-44`)."""
-    df = results.filter(F.col("document_type") == "PAN").withColumn(
-        "f", F.from_json("fields_json", PAN_FIELDS_SCHEMA)
-    )
-    return df.select(
-        F.col("url").alias("pan_url"),
-        normalize_pan(_nz(F.col("f.pan"))).alias("pan"),
-        normalize_name(_nz(F.col("f.name"))).alias("legal_name"),
-        _nz(F.col("f.pan_type")).alias("pan_type"),
-        normalize_date(_nz(F.col("f.incorporation_date"))).alias("incorporation_date"),
-        _nz(F.col("f.name")).alias("raw_name"),
-    )
+    return _adapt(results, _PAN)
 
 
 def adapt_gst(results: DataFrame) -> DataFrame:
     """A6 (`gst_adapter.py:18-56`) incl. P10 PAN-from-GSTIN."""
-    df = results.filter(F.col("document_type") == "GST_CERTIFICATE").withColumn(
-        "f", F.from_json("fields_json", GST_FIELDS_SCHEMA)
-    )
-    addr = F.col("f.principal_address")
-    return df.select(
-        F.col("url").alias("gst_url"),
-        normalize_name(_nz(F.col("f.name"))).alias("legal_name"),
-        _nz(F.col("f.gst_number")).alias("gst_number"),
-        F.upper(F.substring(_nz(F.col("f.gst_number")), 3, 10)).alias("pan"),
-        normalize_constitution_expr(_nz(F.col("f.constitution_of_business"))).alias("constitution"),
-        _nz(F.col("f.constitution_of_business")).alias("raw_constitution"),
-        normalized_address(
-            addr["building_flat_no"], addr["premises_name"], addr["road_street"],
-            addr["locality"], addr["city"], addr["district"], addr["state"],
-            addr["pin_code"],
-        ).alias("principal_address"),
-        _nz(F.col("f.additional_place_of_business")).alias("additional_places"),
-        F.coalesce(F.nullif(F.col("f.total_no_of_additional_places"), F.lit("")), F.lit("0"))
-         .alias("total_additional_places"),
-        _nz(F.col("f.name")).alias("raw_name"),
-    )
+    return _adapt(results, _GST)
 
 
 def adapt_udyam(results: DataFrame) -> DataFrame:
     """A7 (`udyam_adapter.py:18-99`) incl. top-1-by-year enterprise type
     (O1: the reference's sort+[0] becomes ``array_sort`` + ``element_at``)
     and per-unit factory-address normalization via ``transform``."""
-    df = (
-        results.filter(F.col("document_type") == "UDYAM")
-        .withColumn("f", F.from_json("fields_json", UDYAM_FIELDS_SCHEMA))
-        .withColumn("t", F.from_json("tables_json", UDYAM_TABLES_SCHEMA))
-    )
-    addr = F.col("f.official_address")
-    # O1 — `_get_current_enterprise_type` (`udyam_adapter.py:85-99`):
-    # latest classification_year wins. try_element_at: a doc whose
-    # classification table didn't survive extraction (e.g. OCR-leg line
-    # drops) has an EMPTY array — plain element_at would throw task-killing
-    # INVALID_ARRAY_INDEX, violating the poison-row contract.
-    enterprise_type = F.try_element_at(
-        F.reverse(F.array_sort(F.col("t.classification_history"))), F.lit(1)
-    )["enterprise_type"]
-    factories = F.transform(
-        F.col("t.units_details"),
-        lambda u: F.struct(
-            F.regexp_replace(F.trim(u["unit_name"]), r"\s+", " ").alias("unit_name"),
-            F.upper(F.trim(F.coalesce(u["pin"], F.lit("")))).alias("pin"),
-            F.concat_ws(
-                ", ",
-                F.nullif(F.upper(F.trim(u["flat"])), F.lit("")),
-                F.nullif(F.upper(F.trim(u["building"])), F.lit("")),
-                F.nullif(F.upper(F.trim(u["road"])), F.lit("")),
-                F.nullif(F.upper(F.trim(u["village_town"])), F.lit("")),
-                F.nullif(F.upper(F.trim(u["district"])), F.lit("")),
-                F.nullif(F.upper(F.trim(u["state"])), F.lit("")),
-                F.nullif(F.upper(F.trim(u["pin"])), F.lit("")),
-            ).alias("full_address"),
-        ),
-    )
-    return df.select(
-        F.col("url").alias("udyam_url"),
-        normalize_name(_nz(F.col("f.enterprise_name"))).alias("legal_name"),
-        normalize_pan(_nz(F.col("f.pan"))).alias("pan"),
-        _nz(F.col("f.udyam_number")).alias("udyam_number"),
-        normalize_date(_nz(F.col("f.incorporation_date"))).alias("incorporation_date"),
-        normalize_date(_nz(F.col("f.commencement_date"))).alias("commencement_date"),
-        normalized_address(
-            addr["flat_no"], addr["building"], addr["road"], addr["village_town"],
-            addr["city"], addr["district"], addr["state"], addr["pin"],
-        ).alias("registered_address"),
-        F.coalesce(factories, F.array()).alias("factory_addresses"),
-        _nz(enterprise_type).alias("enterprise_type"),
-        _nz(F.col("f.mobile")).alias("mobile"),
-        _nz(F.col("f.email")).alias("email"),
-        _nz(F.col("f.enterprise_name")).alias("raw_name"),
-    )
-
-
-def normalize_constitution_expr(col: Column) -> Column:
-    """A-variant constitution normalization (P16, `base_adapter.py:150-179`):
-    10 canonical categories, input returned as-is when unmatched (distinct
-    from P15 which returns '')."""
-    up = F.upper(F.trim(col))
-    chain = [
-        ("PRIVATE LIMITED", ["PRIVATE LIMITED", "PVT LTD", "PRIVATE LTD", "PRIVATE LIMITED COMPANY"]),
-        ("PUBLIC LIMITED", ["PUBLIC LIMITED", "PUBLIC LTD", "PUBLIC LIMITED COMPANY"]),
-        ("LLP", ["LLP", "LIMITED LIABILITY PARTNERSHIP"]),
-        ("PARTNERSHIP", ["PARTNERSHIP", "PARTNERSHIP FIRM"]),
-        ("PROPRIETORSHIP", ["PROPRIETORSHIP", "SOLE PROPRIETORSHIP", "PROPRIETOR"]),
-        ("HUF", ["HUF", "HINDU UNDIVIDED FAMILY"]),
-        ("TRUST", ["TRUST"]),
-        ("SOCIETY", ["SOCIETY"]),
-        ("AOP", ["AOP", "ASSOCIATION OF PERSONS"]),
-        ("BOI", ["BOI", "BODY OF INDIVIDUALS"]),
-    ]
-    expr = up  # unmatched -> as-is
-    for canonical, variants in reversed(chain):
-        cond = None
-        for v in variants:
-            c = up.contains(F.lit(v))
-            cond = c if cond is None else (cond | c)
-        expr = F.when(cond, F.lit(canonical)).otherwise(expr)
-    return F.when(col.isNull() | (F.trim(col) == ""), F.lit("")).otherwise(expr)
+    return _adapt(results, _UDYAM)
 
 
 # -- A8: entity join -----------------------------------------------------------
 
-def _dedupe_per_key(df: DataFrame, url_col: str) -> DataFrame:
-    """One doc per (pan, doctype): first by url — deterministic, and the
-    relational form of the reference's single-entity assumption. Window +
-    row_number (SURVEY.md §2.7 note on top-1-per-group)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("pan").orderBy(F.col(url_col))
+def _entity_side(results: DataFrame, spec: tuple, doc: str) -> DataFrame:
+    """(entity_key, <doc> struct) with one doc per PAN: the first by url —
+    deterministic, and the relational form of the reference's
+    single-entity assumption (top-1-per-group, SURVEY.md §2.7)."""
+    columns = [name for name, _ in spec[2]]
+    url_col = columns[0]
     return (
-        df.filter(F.col("pan") != "")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        _adapt(results, spec).where("pan != ''")
+        .selectExpr("*", f"row_number() OVER (PARTITION BY pan ORDER BY {url_col}) AS _rn")
+        .where("_rn = 1")
+        .selectExpr("pan AS entity_key", f"struct({', '.join(columns)}) AS {doc}")
     )
 
 
@@ -278,25 +282,10 @@ def build_entities(results: DataFrame) -> DataFrame:
     Scale note: the join keys are near-unique (one entity per PAN), so the
     shuffle is uniform; AQE handles residual skew. Each side is deduped to
     one doc per key first, bounding the join output to |keys|."""
-    pan_docs = _dedupe_per_key(adapt_pan(results), "pan_url")
-    gst_docs = _dedupe_per_key(adapt_gst(results), "gst_url")
-    udyam_docs = _dedupe_per_key(adapt_udyam(results), "udyam_url")
-
-    pan_side = pan_docs.select(
-        F.col("pan").alias("entity_key"),
-        F.struct(*[F.col(c) for c in pan_docs.columns]).alias("pan_doc"),
-    )
-    gst_side = gst_docs.select(
-        F.col("pan").alias("entity_key"),
-        F.struct(*[F.col(c) for c in gst_docs.columns]).alias("gst_doc"),
-    )
-    udyam_side = udyam_docs.select(
-        F.col("pan").alias("entity_key"),
-        F.struct(*[F.col(c) for c in udyam_docs.columns]).alias("udyam_doc"),
-    )
     return (
-        pan_side.join(gst_side, "entity_key", "full_outer")
-        .join(udyam_side, "entity_key", "full_outer")
+        _entity_side(results, _PAN, "pan_doc")
+        .join(_entity_side(results, _GST, "gst_doc"), "entity_key", "full_outer")
+        .join(_entity_side(results, _UDYAM, "udyam_doc"), "entity_key", "full_outer")
     )
 
 
@@ -305,21 +294,15 @@ def duplicate_id_check(results: DataFrame) -> DataFrame:
     conflicting normalized names. A pure groupBy (map-side partial agg);
     this is shuffle boundary #2 and is skew-safe because PAN cardinality is
     ~|entities|."""
-    docs = (
-        results.filter(F.col("entity_pan") != "")
-        .select(
-            F.col("entity_pan").alias("pan"),
-            normalize_name(F.col("entity_name")).alias("name"),
-        )
-    )
+    named = "CASE WHEN name != '' THEN name END"
     return (
-        docs.groupBy("pan")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct(F.when(F.col("name") != "", F.col("name"))).alias("n_names"),
-            F.sort_array(F.collect_set(F.when(F.col("name") != "", F.col("name")))).alias("names"),
-        )
-        .withColumn("is_conflict", F.col("n_names") > F.lit(1))
+        results.where("entity_pan != ''")
+        .selectExpr("entity_pan AS pan", f"{name_sql('entity_name')} AS name")
+        .groupBy("pan")
+        .agg(F.expr("count(1) AS n_docs"),
+             F.expr(f"count(DISTINCT {named}) AS n_names"),
+             F.expr(f"sort_array(collect_set({named})) AS names"))
+        .selectExpr("*", "n_names > 1 AS is_conflict")
     )
 
 
@@ -328,20 +311,14 @@ def checksum_consistency_check(results: DataFrame) -> DataFrame:
     PAN (GSTIN chars 3-12) must exist as a PAN doc with the same id. A
     broadcast-eligible equi-join on a derived key (`north_star`'s "checksum
     consistency check")."""
-    gst = results.filter(
-        (F.col("document_type") == "GST_CERTIFICATE") & (F.col("entity_gstin") != "")
-    ).select(
-        F.col("url").alias("gst_url"),
-        F.col("entity_gstin").alias("gstin"),
-        F.upper(F.substring("entity_gstin", 3, 10)).alias("derived_pan"),
-    )
-    pans = results.filter(
-        (F.col("document_type") == "PAN") & (F.col("entity_pan") != "")
-    ).select(F.col("entity_pan").alias("pan")).distinct()
+    gst = results.where(
+        "document_type = 'GST_CERTIFICATE' AND entity_gstin != ''"
+    ).selectExpr("url AS gst_url", "entity_gstin AS gstin",
+                 "upper(substring(entity_gstin, 3, 10)) AS derived_pan")
+    pans = results.where(
+        "document_type = 'PAN' AND entity_pan != ''"
+    ).selectExpr("entity_pan AS pan").distinct()
     return (
-        gst.join(pans, gst["derived_pan"] == pans["pan"], "left_outer")
-        .select(
-            "gst_url", "gstin", "derived_pan",
-            F.col("pan").isNotNull().cast(BooleanType()).alias("pan_doc_exists"),
-        )
+        gst.join(pans, F.expr("derived_pan = pan"), "left_outer")
+        .selectExpr("gst_url", "gstin", "derived_pan", "pan IS NOT NULL AS pan_doc_exists")
     )

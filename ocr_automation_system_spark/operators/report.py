@@ -4,9 +4,9 @@ The reference's ``ReportGenerator`` (`verification_engine/
 report_generator.py:222-265`) computes per-entity summary counters and an
 overall-status decision cascade over one entity's rule results. Here it is a
 ``groupBy(entity_key)`` with conditional-count aggregates (map-side partial
-aggregation; shuffle on the entity key only) and the cascade as a ``when``
-chain over the aggregates. ``report_generated_at`` is a job parameter, not
-``datetime.now()`` (determinism, SURVEY.md §7)."""
+aggregation; shuffle on the entity key only) and the cascade as a ``CASE``
+over the aggregates, both as Spark SQL text. ``report_generated_at`` is a
+job parameter, not ``datetime.now()`` (determinism, SURVEY.md §7)."""
 
 from __future__ import annotations
 
@@ -14,6 +14,39 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .rules import CRITICAL, FAIL, PASS, SKIPPED, WARNING
+from .sqltext import case, sql_str
+
+
+def _count_if(cond: str) -> str:
+    return f"count(CASE WHEN {cond} THEN 1 END)"
+
+
+def _sorted_messages(cond: str) -> str:
+    return (f"sort_array(collect_list(CASE WHEN {cond} "
+            "THEN concat(rule_id, ': ', message) END))")
+
+
+# G1 counters and G2 lists (`report_generator.py:27-43, 222-251`).
+_REPORT_AGGS = [
+    ("total_rules", "count(1)"),
+    ("passed", _count_if(f"status = '{PASS}'")),
+    ("failed", _count_if(f"status = '{FAIL}'")),
+    ("warnings", _count_if(f"status = '{WARNING}'")),
+    ("skipped", _count_if(f"status = '{SKIPPED}'")),
+    ("critical_failures", _count_if(f"status = '{FAIL}' AND severity = '{CRITICAL}'")),
+    ("matches", _sorted_messages(f"status = '{PASS}'")),
+    ("mismatches", _sorted_messages(f"status IN ('{FAIL}', '{WARNING}')")),
+]
+
+_OVERALL = case([
+    ("critical_failures > 0", "'FAILED (Critical issues found)'"),
+    ("failed > 0", "'FAILED'"),
+    ("warnings > 0", "'PASSED WITH WARNINGS'"),
+], "'PASSED'")
+
+_PASS_RATE = case([
+    ("total_rules > 0", "concat(format_number(passed / total_rules * 100, 1), '%')"),
+], "'N/A'")
 
 
 def entity_report(validation_results: DataFrame, generated_at: str = "") -> DataFrame:
@@ -21,40 +54,15 @@ def entity_report(validation_results: DataFrame, generated_at: str = "") -> Data
 
     ``matches``/``mismatches`` mirror the PASS vs FAIL|WARNING partition of
     `report_generator.py:27-43`, collected as sorted arrays of
-    "RULE_ID: message" strings for determinism."""
-    c = F.col
-    agg = (
+    "RULE_ID: message" strings for determinism. The aggregates and the
+    status cascade are SQL text, one py4j call each."""
+    extra = [f"{sql_str(generated_at)} AS report_generated_at"] if generated_at else []
+    return (
         validation_results.groupBy("entity_key")
-        .agg(
-            F.count(F.lit(1)).alias("total_rules"),
-            F.count(F.when(c("status") == PASS, 1)).alias("passed"),
-            F.count(F.when(c("status") == FAIL, 1)).alias("failed"),
-            F.count(F.when(c("status") == WARNING, 1)).alias("warnings"),
-            F.count(F.when(c("status") == SKIPPED, 1)).alias("skipped"),
-            F.count(F.when((c("status") == FAIL) & (c("severity") == CRITICAL), 1))
-             .alias("critical_failures"),
-            F.sort_array(F.collect_list(
-                F.when(c("status") == PASS,
-                       F.concat(c("rule_id"), F.lit(": "), c("message"))))).alias("matches"),
-            F.sort_array(F.collect_list(
-                F.when(c("status").isin(FAIL, WARNING),
-                       F.concat(c("rule_id"), F.lit(": "), c("message"))))).alias("mismatches"),
-        )
+        .agg(*[F.expr(f"{sql} AS {name}") for name, sql in _REPORT_AGGS])
+        .selectExpr("*", f"{_OVERALL} AS overall_status",
+                    f"{_PASS_RATE} AS pass_rate", *extra)
     )
-    overall = (
-        F.when(c("critical_failures") > 0, F.lit("FAILED (Critical issues found)"))
-        .when(c("failed") > 0, F.lit("FAILED"))
-        .when(c("warnings") > 0, F.lit("PASSED WITH WARNINGS"))
-        .otherwise(F.lit("PASSED"))
-    )
-    pass_rate = F.when(
-        c("total_rules") > 0,
-        F.concat(F.format_number(c("passed") / c("total_rules") * 100, 1), F.lit("%")),
-    ).otherwise(F.lit("N/A"))
-    out = agg.withColumn("overall_status", overall).withColumn("pass_rate", pass_rate)
-    if generated_at:
-        out = out.withColumn("report_generated_at", F.lit(generated_at))
-    return out
 
 
 def entity_info(entities: DataFrame) -> DataFrame:

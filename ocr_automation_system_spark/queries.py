@@ -41,8 +41,7 @@ from .functions import windows as W
 from .functions.links import HTML_SNIFF_RE
 from .functions.multimodal import extract_media_metadata, media_type_summary
 from .operators.adapters import (
-    build_entities, checksum_consistency_check, duplicate_id_check,
-    normalize_name,
+    build_entities, checksum_consistency_check, duplicate_id_check, name_sql,
 )
 from .operators.extract import (
     block_scores, extract_documents, extraction_metrics_by_leg,
@@ -6001,7 +6000,7 @@ def q_name_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 join-key canonicalization (`base_adapter.py:44-69`) on customer."""
     cust = load_table(spark, sf_dir, "customer")
     return cust.select(
-        "c_custkey", normalize_name(F.col("c_name")).alias("norm_name"),
+        "c_custkey", F.expr(name_sql("c_name")).alias("norm_name"),
     )
 
 

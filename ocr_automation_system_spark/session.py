@@ -30,10 +30,28 @@ def package_zip() -> str:
     --py-files $(python -c 'from ocr_automation_system_spark.session import
     package_zip; print(package_zip())')`` is the production invocation; in
     local/driver-api runs ``build_session`` ships it automatically so
-    executor Python workers can unpickle the pandas-UDF closures."""
+    executor Python workers can unpickle the pandas-UDF closures.
+
+    The zip is written under a unique temporary name and then renamed over
+    the fixed path, so drivers starting together on one host never ship
+    each other a half-written file."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
     out = os.path.join(tempfile.gettempdir(), "ocr_automation_system_spark.zip")
+    fd, tmp = tempfile.mkstemp(prefix=".ocr_automation_system_spark.",
+                               suffix=".zip", dir=os.path.dirname(out))
+    os.close(fd)
+    try:
+        os.chmod(tmp, 0o644)  # mkstemp's 0600 would hide it from other users
+        _write_package_zip(tmp, pkg_dir, root)
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    return out
+
+
+def _write_package_zip(out: str, pkg_dir: str, root: str) -> None:
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, _dirnames, filenames in os.walk(pkg_dir):
             if "__pycache__" in dirpath:
@@ -47,7 +65,6 @@ def package_zip() -> str:
                 if fn.endswith((".py", ".dat")):
                     full = os.path.join(dirpath, fn)
                     zf.write(full, os.path.relpath(full, root))
-    return out
 
 
 def build_session(

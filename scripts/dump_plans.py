@@ -1,10 +1,16 @@
 """Regenerate docs/PLANS.md: formatted physical plans of the flagship
-stages with shuffle-hygiene commentary. Run after changing any operator."""
+stages with shuffle-hygiene commentary. Run after changing any operator.
+
+Each generated ``## <title>`` section is replaced in place, so the
+hand-written sections (the audits below the generated ones) survive every
+run; a generated section the file lacks is appended, and a missing file is
+written from the header plus every section."""
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -33,8 +39,9 @@ for the dedup-window (partitionBy pan), reused by the full-outer sort-merge
 joins (same key) — no re-exchange between window and join. Full-outer
 cannot broadcast by definition; keys are near-unique PANs so the shuffle is
 uniform; AQE coalesces post-shuffle partitions at small scale and splits
-skew at large scale. The rules stage adds NO exchange: one wide projection
-+ explode over the joined row.""",
+skew at large scale. The rules stage adds NO exchange: three projections
+over the joined row (shared bindings, one struct column per rule CASE, then
+inline of the rule rows), which whole-stage codegen fuses into one stage.""",
     "lsh_pairs": """The LSH band join shuffles on (band, sig) — the signature, never the
 document text. Signature computation is explode -> md5 -> 8 MIN
 aggregates in ONE whole-stage-codegen hash aggregate: map-side partial
@@ -74,6 +81,15 @@ so a pathological bucket is dropped, not squared. At production scale
 the bucket table is written once, hash-partitioned by bucket, and every
 query is a partition-pruned lookup.""",
 }
+
+
+HEADER = """# PLANS — physical-plan review of the flagship stages
+
+Auto-generated by `python scripts/dump_plans.py` (sf0.001 inputs; plan
+SHAPE is scale-independent, AQE adjusts partition counts at runtime).
+Read top-to-bottom as the answer to: where are the shuffles, what got
+pushed down, and what stays in whole-stage codegen.
+"""
 
 
 def _explain(df) -> str:
@@ -119,22 +135,23 @@ def main() -> None:
          C.benchmark_contamination(docs)),
     ]
 
-    out = ["""# PLANS — physical-plan review of the flagship stages
-
-Auto-generated by `python scripts/dump_plans.py` (sf0.001 inputs; plan
-SHAPE is scale-independent, AQE adjusts partition counts at runtime).
-Read top-to-bottom as the answer to: where are the shuffles, what got
-pushed down, and what stays in whole-stage codegen.
-"""]
-    for title, key, df in sections:
-        out.append(f"## {title}\n\n{COMMENTARY[key]}\n\n```\n{_explain(df)}```\n")
-
-    os.makedirs(os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "docs"), exist_ok=True)
     path = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "docs", "PLANS.md")
+    if os.path.exists(path):
+        with open(path) as fh:
+            text = fh.read()
+    else:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        text = HEADER
+    for title, key, df in sections:
+        body = f"## {title}\n\n{COMMENTARY[key]}\n\n```\n{_explain(df)}```\n"
+        pattern = re.compile(rf"^## {re.escape(title)}\n.*?(?=^## |\Z)",
+                             re.S | re.M)
+        text, n = pattern.subn(lambda _m: body + "\n", text, count=1)
+        if n == 0:
+            text = text.rstrip("\n") + "\n\n" + body
     with open(path, "w") as fh:
-        fh.write("\n".join(out))
+        fh.write(text)
     print(f"wrote {path}")
     spark.stop()
 

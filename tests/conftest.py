@@ -5,6 +5,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# The session default heap (24g) does not fit a 16 GB host next to the
+# Python workers; an explicit SPARK_GRAFT_DRIVER_MEM still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+
 from ocr_automation_system_spark.session import build_session  # noqa: E402
 
 

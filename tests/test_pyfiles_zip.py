@@ -46,3 +46,29 @@ def test_package_zip_imports_standalone_with_data():
     # cache filename
     from ocr_automation_system_spark.corpus import CORPUS_FINGERPRINT
     assert got["fp"] == CORPUS_FINGERPRINT
+
+
+def test_package_zip_concurrent_writers_never_expose_a_partial_zip():
+    """Drivers starting together on one host share the zip's fixed path:
+    each writes a private temporary file and renames it into place, so a
+    reader sees a whole zip at every moment and no temporary is left."""
+    import glob
+    import os
+    from concurrent.futures import ThreadPoolExecutor
+
+    def build_and_read(_):
+        path = package_zip()
+        with zipfile.ZipFile(path) as zf:
+            return path, zf.testzip()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(build_and_read, range(16), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert {p for p, _ in got} == {package_zip()}
+    assert all(bad is None for _, bad in got)
+    tmp_dir = os.path.dirname(package_zip())
+    assert not glob.glob(os.path.join(tmp_dir, ".ocr_automation_system_spark.*.zip"))
