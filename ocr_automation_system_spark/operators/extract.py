@@ -159,8 +159,8 @@ def extraction_metrics_by_leg(results: DataFrame) -> DataFrame:
     """G5 (deterministic form): extraction-metric counters grouped by
     (source_leg, doc_status) — partitioning-independent, so the DuckDB
     oracle twin can hash-check it (`pipeline_sql.SQL_PIPELINE_LINEAGE_METRICS`).
-    The per-partition variant below is the lineage-sink shape used by the
-    resume machinery (`plans/resume.py`)."""
+    The production job's per-bucket counters are observed on its commit
+    write instead (`plans/resume.py`)."""
     return (
         results.groupBy("source_leg", "doc_status")
         .agg(
@@ -171,22 +171,3 @@ def extraction_metrics_by_leg(results: DataFrame) -> DataFrame:
         )
     )
 
-
-def extraction_metrics(results: DataFrame) -> DataFrame:
-    """G5: per-partition extraction-metric counters (blocks kept/dropped,
-    gate failures, poison rows) — the lineage/metrics sink rows required by
-    the north rule; reference analogue is the missing_fields accounting."""
-    return (
-        results.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("blocks_kept").alias("blocks_kept"),
-            F.sum("blocks_dropped").alias("blocks_dropped"),
-            F.count(F.when(F.col("doc_status") == "ok", 1)).alias("docs_ok"),
-            F.count(F.when(F.col("doc_status") == "unusable", 1)).alias("docs_unusable"),
-            F.count(F.when(F.col("doc_status") == "poison", 1)).alias("docs_poison"),
-            F.count(F.when(F.col("source_leg") == "pdf", 1)).alias("docs_pdf_leg"),
-            F.count(F.when(F.col("source_leg") == "ocr", 1)).alias("docs_ocr_leg"),
-            F.sum(F.size("missing_fields")).alias("missing_field_hits"),
-        )
-    )

@@ -1,4 +1,4 @@
-"""Resumable partitioned extraction: checkpoint manifest + lineage rows.
+"""Resumable partitioned extraction: a checkpoint manifest per url-hash bucket.
 
 North-rule requirement: "resumable from checkpoint with per-partition
 lineage + metrics". The reference has no resume story (a rerun is a full
@@ -6,21 +6,17 @@ recompute — SURVEY.md §2.10); this module adds it the way a 10^12-row batch
 job needs it:
 
 * The corpus is split into ``n_buckets`` deterministic url-hash buckets
-  (``pmod(xxhash64(url), n)``) — the unit of commit and of retry. On
-  Iceberg this maps to ``bucket(N, url)`` partition transforms and
-  overwrite-by-filter commits; locally each bucket is a parquet
-  subdirectory written atomically (tmp dir + rename).
-* After each bucket lands, a manifest entry (JSON, one file per bucket)
-  records row counts + the per-Spark-partition lineage metrics for that
-  bucket. A bucket with a manifest entry is never recomputed — a killed
-  job resumes by running only the missing buckets.
-* Writes are idempotent: a bucket that died mid-write left no manifest, so
-  the retry overwrites the partial output.
-
-The per-bucket loop is driver-side sequencing of independent Spark jobs —
-each job is a narrow scan-filter + extraction pass, so resume granularity
-costs no extra shuffle. At production scale buckets run a few at a time to
-bound failure blast radius while keeping the cluster saturated.
+  (``pmod(xxhash64(url), n)``, Iceberg's ``bucket(N, url)``) — the unit of
+  commit and of retry; locally a ``bucket=<b>`` parquet subdirectory.
+* One call commits one wave: every pending bucket, or the first
+  ``max_buckets`` of them. The wave is scanned, extracted and written once
+  (``partitionBy("bucket")`` into ``_staging/``); then each bucket is
+  renamed into ``extractions/`` and its manifest written — the atomic point.
+* A manifest holds the bucket's ``n_rows``, doc status and leg counts,
+  blocks kept/dropped, missing-field hits (observed on the commit write
+  itself: no re-read, no extra Spark job) and its commit time.
+* A bucket with a manifest is never recomputed, so a killed job resumes by
+  running only the missing buckets; a failure costs at most one wave.
 """
 
 from __future__ import annotations
@@ -30,18 +26,40 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_documents, extraction_metrics
+from ..operators.extract import EXTRACTION_SCHEMA, extract_documents
 
 MANIFEST_DIR = "_manifest"
+
+#: Manifest counters as SQL aggregates over one bucket's rows (``{b}`` is
+#: the bucket predicate), observed on the commit write. Every row feeds every
+#: bucket's aggregates, so callers with many buckets bound waves by
+#: ``max_buckets`` (scripts/spark_submit_job.py commits 64 at a time).
+_COUNTERS = {
+    "n_rows": "count_if({b})",
+    "docs_ok": "count_if({b} AND doc_status = 'ok')",
+    "docs_unusable": "count_if({b} AND doc_status = 'unusable')",
+    "docs_poison": "count_if({b} AND doc_status = 'poison')",
+    "docs_pdf_leg": "count_if({b} AND source_leg = 'pdf')",
+    "docs_ocr_leg": "count_if({b} AND source_leg = 'ocr')",
+    "blocks_kept": "coalesce(sum(IF({b}, blocks_kept, 0)), 0)",
+    "blocks_dropped": "coalesce(sum(IF({b}, blocks_dropped, 0)), 0)",
+    "missing_field_hits": "coalesce(sum(IF({b}, size(missing_fields), 0)), 0)",
+}
 
 
 def bucket_expr(url_col: str = "url", n_buckets: int = 16):
     """Deterministic commit-unit assignment (Iceberg ``bucket(N, url)``
     analogue)."""
     return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets)).cast("int")
+
+
+def _bucket_counters(b: int):
+    fields = ", ".join(f"'{name}', {agg.format(b=f'bucket = {b}')}"
+                       for name, agg in _COUNTERS.items())
+    return F.expr(f"named_struct({fields}) AS b{b}")
 
 
 def _manifest_path(output_dir: str, bucket: int) -> str:
@@ -63,72 +81,57 @@ def run_resumable_extraction(
     max_buckets: int | None = None,
 ) -> dict:
     """Extract ``documents`` into ``output_dir/extractions/bucket=<b>/``,
-    committing one url-hash bucket at a time with manifest + lineage.
-
-    ``max_buckets`` bounds how many *new* buckets run (test hook for the
-    kill/resume scenario). Returns {"ran": [...], "skipped": [...]}.
-    """
-    os.makedirs(os.path.join(output_dir, MANIFEST_DIR), exist_ok=True)
+    committing one wave of pending buckets (at most ``max_buckets``) with a
+    manifest each. Returns {"ran": wave, "skipped": committed buckets}."""
     done = committed_buckets(output_dir, n_buckets)
-    with_bucket = documents.withColumn("_bucket", bucket_expr("url", n_buckets))
+    wave = [b for b in range(n_buckets) if b not in done][:max_buckets]
+    status = {"ran": wave, "skipped": sorted(done)}
+    if not wave:
+        return status
+    if len(wave) < n_buckets:
+        documents = documents.filter(bucket_expr("url", n_buckets).isin(wave))
 
-    ran, skipped = [], []
-    for b in range(n_buckets):
-        if b in done:
-            skipped.append(b)
-            continue
-        if max_buckets is not None and len(ran) >= max_buckets:
-            break
+    counters = Observation("resume")
+    results = (extract_documents(documents)
+               .withColumn("bucket", bucket_expr("url", n_buckets))
+               .observe(counters, *[_bucket_counters(b) for b in wave]))
+    # Stage OUTSIDE the partition-discovery root: a dotted sibling such as
+    # `extractions/bucket=N.inprogress` would still be discovered as a bogus
+    # partition value after a kill mid-write.
+    staging = os.path.join(output_dir, "_staging")
+    shutil.rmtree(staging, ignore_errors=True)
+    results.write.partitionBy("bucket").parquet(staging)
+    observed = counters.get
 
-        slice_df = with_bucket.filter(F.col("_bucket") == b).drop("_bucket")
-        results = extract_documents(slice_df)
-
+    os.makedirs(os.path.join(output_dir, MANIFEST_DIR), exist_ok=True)
+    os.makedirs(os.path.join(output_dir, "extractions"), exist_ok=True)
+    for b in wave:
         dest = os.path.join(output_dir, "extractions", f"bucket={b}")
-        # Stage OUTSIDE the partition-discovery root: a dotted sibling of
-        # `extractions/` would still be a visible partition dir to Spark
-        # ("bucket=N.inprogress" -> bogus string partition value from a
-        # run killed mid-write); `_staging/` at the output root is never
-        # scanned by read_extractions.
-        tmp = os.path.join(output_dir, "_staging", f"bucket={b}")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        os.makedirs(os.path.dirname(tmp), exist_ok=True)
-        results.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(dest):  # stale partial from a killed run
-            shutil.rmtree(dest)
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        os.rename(tmp, dest)
-
-        committed = spark.read.parquet(dest)
-        lineage = [r.asDict() for r in extraction_metrics(committed).collect()]
-        n_rows = sum(m["docs"] for m in lineage)
-        manifest = {
-            "bucket": b,
-            "n_rows": n_rows,
-            "committed_at": time.time(),
-            "lineage": lineage,
-        }
+        shutil.rmtree(dest, ignore_errors=True)  # stale from a killed run
+        src = os.path.join(staging, f"bucket={b}")
+        os.makedirs(src, exist_ok=True)  # an empty bucket writes no files
+        os.rename(src, dest)
         mp = _manifest_path(output_dir, b)
         with open(mp + ".tmp", "w") as fh:
-            json.dump(manifest, fh, indent=1, default=str)
+            json.dump({"bucket": b, **observed[f"b{b}"].asDict(),
+                       "committed_at": time.time()}, fh, indent=1)
         os.rename(mp + ".tmp", mp)  # manifest commit = the atomic point
-        ran.append(b)
+    shutil.rmtree(staging)
+    return status
 
-    return {"ran": ran, "skipped": skipped}
 
-
-def read_extractions(spark: SparkSession, output_dir: str,
-                     keep_bucket: bool = False) -> DataFrame:
-    """All committed buckets as one DataFrame. Partition discovery turns
-    the bucket= directories into a prunable ``bucket`` column; dropped by
-    default so the schema matches a direct ``extract_documents`` run."""
-    df = spark.read.parquet(os.path.join(output_dir, "extractions"))
-    return df if keep_bucket else df.drop("bucket")
+def read_extractions(spark: SparkSession, output_dir: str) -> DataFrame:
+    """All committed buckets, read with the known schema (no inference job;
+    an all-empty commit reads as 0 rows) and without the ``bucket``
+    partition column, so the schema matches a direct ``extract_documents``."""
+    return (spark.read.schema(EXTRACTION_SCHEMA)
+            .parquet(os.path.join(output_dir, "extractions"))
+            .drop("bucket"))
 
 
 def lineage_summary(output_dir: str, n_buckets: int) -> dict:
     """Aggregate manifest view: per-bucket rows + total (job-audit
-    surface; the per-Spark-partition detail stays in each manifest)."""
+    surface; the per-bucket counters stay in each manifest)."""
     out = {"buckets": {}, "total_rows": 0}
     for b in committed_buckets(output_dir, n_buckets):
         with open(_manifest_path(output_dir, b)) as fh:

@@ -3294,8 +3294,8 @@ FROM b, unnest(CASE WHEN n > 0 THEN range(1, len(bounds))
 #: clamped-CDC contract geometry: divisor 64 with a [48, 192] bracket
 #: so BOTH clamps demonstrably fire on the ~550-char corpus docs
 #: (min-skip merges boundary-dense runs, max forces cuts in boundary
-#: droughts). Production: divisor 2048, bracket [8 KiB? no — 4·D, 16·D]
-#: — parameters, not structure.
+#: droughts). Production: divisor 2048 with the [4·D, 16·D]
+#: bracket — parameters, not structure.
 _CDC_CLAMP_DIV = 64
 _CDC_MIN = 48
 _CDC_MAX = 192
@@ -6809,7 +6809,7 @@ def extractions_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     times (one branch per doctype adapter) and several pipeline queries
     share it — without the persist every branch would re-run the
     mapInPandas extraction pass. Mirrors the production pipeline, which
-    writes extractions to a table and reads it back (plans/pipeline.py)."""
+    writes extractions to a table and reads it back (plans/resume.py)."""
     key = (id(spark), sf_dir)
     df = _EXTRACTION_CACHE.get(key)
     if df is None:
@@ -6910,8 +6910,8 @@ def q_pipeline_checksum_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic (source_leg x doc_status) metric totals — the
-    hash-checkable form; the per-partition lineage rows stay an internal
-    operator (`extraction_metrics`, written by plans/resume)."""
+    hash-checkable form; the production job's per-bucket counters are
+    observed on its commit write (plans/resume.py manifests)."""
     return extraction_metrics_by_leg(extractions_for(spark, sf_dir))
 
 

@@ -32,7 +32,7 @@ exchanges — extraction throughput scales linearly with executors, which is
 what the N->4N efficiency criterion measures. The `%PDF` magic-byte filter
 appears pushed against the scan of each leg, so the expensive leg reads only
 its subset.""",
-    "entity_join": """Input is the COMMITTED extraction table (plans/pipeline.py writes it
+    "entity_join": """Input is the COMMITTED extraction table (plans/resume.py writes it
 once; each adapter branch re-reads with its doctype filter + pruned columns
 pushed to the scan). Shuffle inventory: one hash exchange per doctype side
 for the dedup-window (partitionBy pan), reused by the full-outer sort-merge
@@ -106,7 +106,7 @@ def main() -> None:
     results = extract_documents(corpus)
 
     # The validation stage consumes the COMMITTED extraction table (three
-    # adapter branches re-read it) — mirror plans/pipeline.py, which writes
+    # adapter branches re-read it) — mirror plans/resume.py, which writes
     # extraction once and reads it back, instead of inlining the UDF pass
     # into every branch.
     import tempfile

@@ -42,6 +42,11 @@ from ocr_automation_system_spark.plans.resume import (  # noqa: E402
 from ocr_automation_system_spark.session import build_session  # noqa: E402
 from ocr_automation_system_spark.sources.catalog import write_results  # noqa: E402
 
+#: Url-hash buckets committed per extraction wave: a failed wave loses at
+#: most this many buckets' work (every finished wave stays committed), and
+#: each wave's observed manifest counters stay bounded.
+RESUME_WAVE = 64
+
 
 def main(argv=None, stop_session: bool = True) -> int:
     p = argparse.ArgumentParser(description=__doc__)
@@ -264,6 +269,8 @@ def main(argv=None, stop_session: bool = True) -> int:
                         "from it when present (exact incremental "
                         "refit) and rewrite it after fitting")
     args = p.parse_args(argv)
+    if args.curriculum_blend and not args.curriculum:
+        p.error("--curriculum-blend requires --curriculum")
 
     spark = build_session(app_name="ocr_automation_system_spark_job", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
@@ -314,10 +321,17 @@ def main(argv=None, stop_session: bool = True) -> int:
     else:
         p.error("one of --input / --input-warc / --synthetic is required")
 
-    status = run_resumable_extraction(
-        spark, documents, args.output, n_buckets=args.n_buckets)
-    print(f"extraction: ran={len(status['ran'])} "
-          f"skipped={len(status['skipped'])} buckets")
+    ran, skipped = [], None
+    while True:
+        status = run_resumable_extraction(
+            spark, documents, args.output, n_buckets=args.n_buckets,
+            max_buckets=RESUME_WAVE)
+        if skipped is None:
+            skipped = status["skipped"]
+        if not status["ran"]:
+            break
+        ran += status["ran"]
+    print(f"extraction: ran={len(ran)} skipped={len(skipped)} buckets")
 
     results = read_extractions(spark, args.output)
     validation = run_rules(build_entities(results), as_of=args.as_of)

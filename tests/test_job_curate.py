@@ -9,6 +9,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "scripts"))
 
@@ -742,3 +744,53 @@ def test_epochs_curriculum_blend_monotone_displacement(spark, tmp_path):
                  ep2.filter(F.col("epoch") == k).orderBy("sort_key")
                  .collect()]
         assert again == orders[k], f"epoch {k} not rerun-identical"
+
+
+def test_curriculum_blend_without_curriculum_is_a_usage_error(
+        monkeypatch, tmp_path):
+    """--curriculum-blend alone would be silently inert (blending needs
+    the --curriculum warmup order); the job refuses it right after
+    argument parsing, before it builds a Spark session."""
+    def no_session(*_a, **_k):
+        raise AssertionError("a Spark session was built")
+
+    monkeypatch.setattr(spark_submit_job, "build_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        spark_submit_job.main(
+            ["--synthetic", "10", "--output", str(tmp_path / "job"),
+             "--curate", "--epochs", "4", "--curriculum-blend"],
+            stop_session=False)
+    assert exc.value.code == 2
+
+
+def test_job_commits_bounded_waves_and_a_failed_wave_keeps_earlier_ones(
+        spark, monkeypatch, tmp_path, capsys):
+    """The job commits its url-hash buckets RESUME_WAVE at a time: a wave
+    that fails loses only its own buckets, and the rerun runs the rest."""
+    from ocr_automation_system_spark.plans.resume import committed_buckets
+
+    out = str(tmp_path / "job")
+    argv = ["--synthetic", "60", "--output", out]
+    commit = spark_submit_job.run_resumable_extraction
+    waves = []
+
+    def lose_second_wave(*args, **kwargs):
+        waves.append(kwargs["max_buckets"])
+        if len(waves) == 2:
+            raise RuntimeError("executor lost")
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(spark_submit_job, "RESUME_WAVE", 5)
+    monkeypatch.setattr(spark_submit_job, "run_resumable_extraction",
+                        lose_second_wave)
+    with pytest.raises(RuntimeError, match="executor lost"):
+        spark_submit_job.main(argv, stop_session=False)
+    assert waves == [5, 5]
+    assert committed_buckets(out, 16) == {0, 1, 2, 3, 4}
+
+    monkeypatch.setattr(spark_submit_job, "run_resumable_extraction", commit)
+    capsys.readouterr()
+    assert spark_submit_job.main(argv, stop_session=False) == 0
+    printed = capsys.readouterr().out
+    assert "extraction: ran=11 skipped=5 buckets" in printed
+    assert "done: 60 docs across 16 committed buckets" in printed

@@ -6,7 +6,7 @@ import pandas as pd
 
 from ocr_automation_system_spark.corpus import generate_rows
 from ocr_automation_system_spark.operators.extract import (
-    extract_documents, extraction_metrics,
+    extract_documents, extraction_metrics_by_leg,
 )
 from ocr_automation_system_spark.oracle.doctype import extract_document
 
@@ -60,6 +60,6 @@ def test_single_pass_equals_two_pass(spark, corpus_path):
 def test_metrics_totals(spark, corpus_path):
     documents = spark.read.parquet(corpus_path)
     results = extract_documents(documents)
-    m = extraction_metrics(results).toPandas()
+    m = extraction_metrics_by_leg(results).toPandas()
     assert int(m["docs"].sum()) == 300
-    assert int(m["docs_pdf_leg"].sum()) > 0
+    assert int(m.loc[m["source_leg"] == "pdf", "docs"].sum()) > 0

@@ -5,7 +5,9 @@ row."""
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
 
 import pytest
 
@@ -90,6 +92,88 @@ def test_rerun_is_idempotent(spark, docs, tmp_path):
     third = run_resumable_extraction(spark, docs, out, n_buckets=4)
     assert third["ran"] == [] and third["skipped"] == [0, 1, 2, 3]
     assert read_extractions(spark, out).count() == docs.count()
+
+
+def _manifest(out, b):
+    return os.path.join(out, "_manifest", f"bucket_{b:05d}.json")
+
+
+def _jobs_of(spark, run):
+    """Spark jobs launched by ``run()``, counted under a job group."""
+    sc = spark.sparkContext
+    group = f"resume-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_wave_job_count_does_not_grow_with_buckets(spark, docs, tmp_path):
+    """A wave is one scan, one extraction and one partitioned write with
+    observed manifest counters, whatever the bucket count."""
+    jobs = {n: _jobs_of(spark, lambda n=n: run_resumable_extraction(
+                spark, docs, str(tmp_path / f"b{n}"), n_buckets=n))
+            for n in (2, 8)}
+    assert jobs[2] == jobs[8] <= 4, jobs
+
+
+@pytest.fixture(scope="module")
+def committed_schema(spark, docs, tmp_path_factory):
+    """Schema of a plain read of an ordinary non-empty commit."""
+    out = str(tmp_path_factory.mktemp("schema"))
+    run_resumable_extraction(spark, docs.limit(20), out, n_buckets=2)
+    return spark.read.parquet(os.path.join(out, "extractions")) \
+        .drop("bucket").schema
+
+
+@pytest.mark.parametrize("n_docs", [0, 1])
+def test_empty_buckets_commit_and_read_back(spark, docs, tmp_path,
+                                            committed_schema, n_docs):
+    """A bucket with no rows writes no files, yet commits (an empty
+    directory plus its manifest): an empty corpus, or one doc over 4
+    buckets, reads back its row count with the ordinary schema."""
+    out = str(tmp_path / "run")
+    status = run_resumable_extraction(spark, docs.limit(n_docs), out,
+                                      n_buckets=4)
+    assert status["ran"] == [0, 1, 2, 3]
+    assert lineage_summary(out, 4)["total_rows"] == n_docs
+    got = read_extractions(spark, out)
+    assert got.count() == n_docs
+    assert got.schema == committed_schema
+
+
+def test_renamed_but_uncommitted_bucket_reruns_alone(spark, docs, tmp_path):
+    """A kill between a bucket's rename and its manifest write leaves its
+    directory without a commit: the rerun recomputes only that bucket,
+    leaves the other manifests alone, converges to a direct extraction,
+    and every manifest's counters match its committed rows."""
+    out = str(tmp_path / "run5")
+    run_resumable_extraction(spark, docs, out, n_buckets=4)
+    os.remove(_manifest(out, 2))
+    assert os.path.isdir(os.path.join(out, "extractions", "bucket=2"))
+    kept = {b: os.path.getmtime(_manifest(out, b)) for b in (0, 1, 3)}
+
+    again = run_resumable_extraction(spark, docs, out, n_buckets=4)
+    assert again == {"ran": [2], "skipped": [0, 1, 3]}
+    assert {b: os.path.getmtime(_manifest(out, b)) for b in kept} == kept
+    assert _sorted_rows(read_extractions(spark, out)) == \
+        _sorted_rows(extract_documents(docs))
+
+    for b in range(4):
+        with open(_manifest(out, b)) as fh:
+            m = json.load(fh)
+        rows = spark.read.parquet(
+            os.path.join(out, "extractions", f"bucket={b}")).toPandas()
+        assert m["n_rows"] == len(rows)
+        for s in ("ok", "unusable", "poison"):
+            assert m[f"docs_{s}"] == (rows["doc_status"] == s).sum()
+        for leg in ("pdf", "ocr"):
+            assert m[f"docs_{leg}_leg"] == (rows["source_leg"] == leg).sum()
+        assert m["blocks_kept"] == rows["blocks_kept"].sum()
+        assert m["blocks_dropped"] == rows["blocks_dropped"].sum()
+        assert m["missing_field_hits"] == rows["missing_fields"].map(len).sum()
 
 
 def test_cc_resumes_from_committed_rounds(spark, tmp_path):
