@@ -202,8 +202,8 @@ def main() -> None:
         total += best
 
     # North-rule throughput: docs/sec through the full extraction operator
-    # (two-pass html+pdf legs, mapInPandas), measured on a warmed JVM,
-    # best of two passes.
+    # (one mapInPandas pass, per-row html/pdf/ocr legs), measured on a
+    # warmed JVM, best of two passes.
     #
     # Honesty notes (both bit round 1):
     # * clearCache() first — the pipeline queries persist an identical-plan

@@ -14,7 +14,7 @@ idiomatic Spark pipeline over a Common-Crawl-style ``documents`` table
                    extracted text is byte-identical per url by construction.
 * ``functions/`` — JVM-side column expressions ([B] operators in SURVEY.md §2)
                    plus dedup/similarity/text-statistics primitives.
-* ``operators/`` — Spark operators: two-pass extraction (`mapInPandas`),
+* ``operators/`` — Spark operators: one-pass extraction (`mapInPandas`),
                    adapters, validation-rule join stages, report aggregation,
                    dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard),
                    similarity search, text analysis.
@@ -24,9 +24,10 @@ idiomatic Spark pipeline over a Common-Crawl-style ``documents`` table
                    manifest) and the Structured Streaming leg.
 
 Design rules (SURVEY.md §4, §7): DataFrame-declarative everywhere, Arrow-
-vectorized pandas UDFs only (never per-row Python UDFs), two-pass execution
-for the expensive fallback leg, exception isolation inside UDFs (a poison row
-costs one row, not a task), explicit partitioning + AQE + salting for skew.
+vectorized pandas UDFs only (never per-row Python UDFs), a lazily built
+per-worker model for the expensive fallback leg, exception isolation inside
+UDFs (a poison row costs one row, not a task), explicit partitioning + AQE +
+salting for skew.
 """
 
 __version__ = "0.1.0"

@@ -1178,8 +1178,7 @@ def c4_span_dedup(df: DataFrame, span: int = 3, id_col: str = "doc_id",
 
 def duplicate_spans(df: DataFrame, w: int = 8, text_col: str = "text",
                     id_col: str = "doc_id",
-                    max_docs_per_shingle: int = 64,
-                    persist_survivors: bool = True) -> DataFrame:
+                    max_docs_per_shingle: int = 64) -> DataFrame:
     """Exact duplicated-span detection between document pairs (the
     ExactSubstr dedup signal of Lee et al. 2022, re-expressed relationally):
     (doc_a, doc_b, n_aligned, max_span_tokens) where ``max_span_tokens``
@@ -1201,11 +1200,11 @@ def duplicate_spans(df: DataFrame, w: int = 8, text_col: str = "text",
     shingles, then two hash aggregations keyed by the pair. Never
     all-pairs; every stage is a keyed shuffle with map-side combine.
     The census-surviving shingle table is PERSISTED before the self-join
-    (``persist_survivors``) — without it each alias recomputes the census
-    subtree and re-reads the scan (visible as duplicated subtrees in
-    `.explain`); survivors are the rare duplicated shingles, orders of
-    magnitude smaller than the shingle stream, and at cluster scale the
-    production job writes them bucketed by hash instead.
+    — without it each alias recomputes the census subtree and re-reads
+    the scan (visible as duplicated subtrees in `.explain`); survivors
+    are the rare duplicated shingles, orders of magnitude smaller than
+    the shingle stream, and at cluster scale the production job writes
+    them bucketed by hash instead.
     """
     # Gram identity is INTERNAL (the output carries only doc pairs and
     # span lengths), so the Spark side hashes the w-token slice with
@@ -1223,9 +1222,7 @@ def duplicate_spans(df: DataFrame, w: int = 8, text_col: str = "text",
               .filter((F.col("_nd") >= 2)
                       & (F.col("_nd") <= max_docs_per_shingle))
               .select("_h"))
-    s = sh.join(census, "_h")
-    if persist_survivors:
-        s = s.persist()
+    s = sh.join(census, "_h").persist()
 
     a, b = s.alias("a"), s.alias("b")
     pairs = (a.join(b, (F.col("a._h") == F.col("b._h"))
@@ -1756,9 +1753,7 @@ def cdc_chunks(df: DataFrame, id_col: str = "doc_id",
     This replaces the round-4 HOF kernel that paid one interpreted
     md5-per-char — the repo's one genuine 100x-scale compute
     multiplier (top-3 bench entries at 5.6-6.5 s each at sf0.1; the
-    gear kernel runs the same scan in < 0.1 s kernel time). The
-    md5-gram form survives as :func:`cdc_chunks_md5` (legacy contract
-    kernel, cross-checked by tests)."""
+    gear kernel runs the same scan in < 0.1 s kernel time)."""
     return _cdc_map(df, id_col, text_col, w, divisor)
 
 
@@ -1822,63 +1817,6 @@ def cdc_chunks_clamped(df: DataFrame, id_col: str = "doc_id",
         return cdc_cuts_clamped(cand, n, min_len, max_len)
 
     return _cdc_map(df, id_col, text_col, w, divisor, cut_fn=_clamp)
-
-
-def cdc_chunks_md5(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", w: int = CDC_W,
-                   divisor: int = CDC_DIVISOR) -> DataFrame:
-    """The round-4 CDC kernel, kept as the legacy contract twin: the
-    boundary gram is hashed by the repo's md5 convention (one md5 per
-    char position) instead of the Gear table. Semantically a valid CDC
-    (content-keyed boundaries, identical chunk-tiling law) and
-    replayable verbatim in DuckDB SQL — but ~100x the compute of
-    :func:`cdc_chunks` at the boundary scan, which is why the
-    registered queries now run the gear form. Cross-kernel property
-    tests (tiling, insertion-robustness) pin both.
-
-    Scale shape: one zero-shuffle projection per row — positions →
-    boundary filter → bounds → per-chunk substr+md5, all array HOFs
-    (interpreted lambdas, ``'*(n)'`` narrow, not codegen — the honest
-    claim) with the bounds array lambda-BOUND once per row
-    (``bind_array``) so the boundary scan never re-runs per chunk.
-    Empty docs emit no rows."""
-    from .text import bind_array, lazy_seq
-
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    n = F.length(t)
-
-    def _grams_to_cuts(txt):
-        starts = lazy_seq(n >= w, F.lit(1), n - w + 1)
-        cut = F.filter(
-            starts,
-            lambda i: F.pmod(
-                F.conv(F.substring(F.md5(F.substring(txt, i, F.lit(w))),
-                                   1, 8), 16, 10).cast("long"),
-                F.lit(divisor)) == 0)
-        ends = F.transform(cut, lambda i: i + F.lit(w - 1))
-        return F.filter(ends, lambda p: p < n)
-
-    bounds = F.concat(F.array(F.lit(0)),
-                      bind_array(t, _grams_to_cuts),
-                      F.array(n))
-
-    def _chunks(b):
-        idx = lazy_seq(n > 0, F.lit(1), F.size(b) - 1)
-        return F.transform(idx, lambda j: F.struct(
-            j.cast("int").alias("chunk_idx"),
-            (F.element_at(b, j) + 1).cast("int").alias("start"),
-            (F.element_at(b, j + 1) - F.element_at(b, j)).cast("int")
-            .alias("length"),
-            F.md5(F.substring(
-                t, F.element_at(b, j) + 1,
-                F.element_at(b, j + 1) - F.element_at(b, j)))
-            .alias("chunk_md5")))
-
-    return (df.select(F.col(id_col), bind_array(bounds, _chunks)
-                      .alias("_ch"))
-            .select(id_col, F.explode("_ch").alias("c"))
-            .select(id_col, "c.chunk_idx", "c.start", "c.length",
-                    "c.chunk_md5"))
 
 
 def cdc_dup_pairs(df: DataFrame, id_col: str = "doc_id",

@@ -483,8 +483,7 @@ def bag_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 def containment_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", n: int = 3,
                       threshold: float = 0.5,
-                      max_docs_per_shingle: int = 64,
-                      persist_survivors: bool = True) -> DataFrame:
+                      max_docs_per_shingle: int = 64) -> DataFrame:
     """One-sided near-containment pairs (Broder 1997's containment
     c(A,B) = |S(A)∩S(B)| / |S(A)| — the quote/subset signal): pairs
     where either doc's shingle set is >= ``threshold`` covered by the
@@ -515,12 +514,10 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
           .select(F.col(id_col).alias("_doc"),
                   F.explode(shingle_hashes(
                       shingles(F.col(text_col), n))).alias("_h")))
-    surv = drop_overcap_keys(sh, "_h", max_docs_per_shingle)
-    if persist_survivors:
-        # read 3x (sizes + both self-join sides); survivors are the
-        # non-boilerplate shingle stream — at cluster scale write them
-        # bucketed by hash instead (the duplicate_spans convention)
-        surv = surv.persist()
+    # read 3x (sizes + both self-join sides); survivors are the
+    # non-boilerplate shingle stream — at cluster scale write them
+    # bucketed by hash instead (the duplicate_spans convention)
+    surv = drop_overcap_keys(sh, "_h", max_docs_per_shingle).persist()
     sizes = surv.groupBy("_doc").agg(F.count(F.lit(1)).alias("_sz"))
     a, b = surv.alias("a"), surv.alias("b")
     common = (a.join(b, "_h")

@@ -173,7 +173,6 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
              weight_col: str = "weight",
              broadcast_ranks: bool = True,
              checkpoint_every: int = 0,
-             persist_static: bool = True,
              seeds: list | None = None) -> DataFrame:
     """Damped PageRank over a weighted edge list -> (node, rank).
 
@@ -202,11 +201,10 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     aggregate (no driver-side action; the whole thing stays one lazy
     plan); a seed set enters as one broadcast ``isin`` literal.
 
-    ``persist_static`` caches the per-iteration-reused node and
-    edge-fraction tables (otherwise every iteration re-derives them from
-    the source scan — visible as duplicated subtrees in `.explain`). At
-    cluster scale prefer writing ``frac`` bucketed by ``src`` once and
-    passing ``persist_static=False``.
+    The per-iteration-reused node and edge-fraction tables are persisted
+    (otherwise every iteration re-derives them from the source scan —
+    visible as duplicated subtrees in `.explain`). At cluster scale
+    prefer writing ``frac`` bucketed by ``src`` once.
     """
     if seeds is not None and not seeds:
         raise ValueError("seeds must be a non-empty list (or None)")
@@ -220,9 +218,8 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     out_w = e.groupBy("src").agg(F.sum("w").alias("_ow"))
     frac = (e.join(out_w, "src")
             .select("src", "dst", (F.col("w") / F.col("_ow")).alias("_f")))
-    if persist_static:
-        nodes = nodes.persist()
-        frac = frac.persist()
+    nodes = nodes.persist()
+    frac = frac.persist()
 
     d = F.lit(float(damping))
     if seeds is None:
@@ -265,8 +262,7 @@ _DEC = "decimal(38,0)"
 
 def hits(edges: DataFrame, iters: int = 2,
          src_col: str = "src", dst_col: str = "dst",
-         broadcast_scores: bool = True,
-         persist_static: bool = True) -> DataFrame:
+         broadcast_scores: bool = True) -> DataFrame:
     """Kleinberg HITS (hubs & authorities) over an edge list ->
     (node, authority, hub) with both scores L1-normalized.
 
@@ -300,9 +296,8 @@ def hits(edges: DataFrame, iters: int = 2,
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct())
-    if persist_static:
-        e = e.persist()
-        nodes = nodes.persist()
+    e = e.persist()
+    nodes = nodes.persist()
 
     def _bc(df):
         return F.broadcast(df) if broadcast_scores else df

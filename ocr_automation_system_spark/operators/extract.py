@@ -1,17 +1,18 @@
 """The extraction operator: documents scan -> per-url extraction records.
 
 Spark lifecycle equivalent of reference EP1/EP2 (SURVEY.md §3): Iceberg/
-parquet scan -> leg split -> ``mapInPandas`` batches wrapping the *oracle
-functions* -> union. The whole stage is narrow (zero shuffles), so extraction
+parquet scan -> one ``mapInPandas`` pass whose batches wrap the *oracle
+functions*. The whole stage is narrow (zero shuffles), so extraction
 throughput scales linearly with executors — the property the 2-cluster-size
 efficiency metric measures.
 
-Two-pass execution (SURVEY.md §4 "lazy expensive-leg evaluation",
-`core/extractor.py:59-78`): the cheap HTML leg and the expensive PDF/OCR leg
-run as *separate filtered passes*, not a per-row conditional inside one UDF,
-so the heavy decoder never initializes for clean HTML partitions. The leg
-predicate is a JVM-side byte test on the BINARY payload (``%PDF`` magic) —
-pushed to the scan, no Python round-trip for routing.
+Why one pass: ``oracle.doctype.extract_document`` routes each row on its
+``%PDF`` magic, and the expensive OCR model is a lazy per-worker singleton
+(``oracle.ocr_stub.get_model``) that reused Python workers keep across tasks,
+so the reference's deferred OCR import (`core/extractor.py:59-78`) costs one
+model build per worker that meets a scanned PDF. Splitting the scan into
+per-leg filtered passes would only read the payload column twice and double
+the tasks and the files written.
 
 Exception isolation: ``oracle.doctype.extract_document`` is total — poison
 rows come back as ``doc_status='poison'`` rows, a thrown error never kills a
@@ -73,35 +74,20 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def is_pdf_payload_col(col="html"):
-    """JVM-side leg predicate: BINARY payload starts with the %PDF magic."""
+    """JVM-side byte test: BINARY payload starts with the %PDF magic."""
     return F.substring(F.col(col), 1, len(PDF_MAGIC)) == F.lit(PDF_MAGIC)
 
 
-def extract_documents(documents: DataFrame, two_pass: bool = True) -> DataFrame:
-    """documents(url, warc_ts, html, text, lang) -> extraction records.
-
-    ``two_pass=True`` (default) splits the HTML leg from the PDF leg so the
-    expensive decoder only ever runs on the PDF subset; both passes are
-    narrow maps over the same scan (Catalyst reuses the scan via DSv2 or
-    re-reads with the pushed filter — either way no shuffle).
-    """
+def extract_documents(documents: DataFrame) -> DataFrame:
+    """documents(url, warc_ts, html, text, lang) -> extraction records, batch
+    or streaming (``ensure_parallelism`` leaves a stream as it is)."""
     from ..functions.util import ensure_parallelism
 
     # Split-starved local inputs (one parquet row group) would pin the whole
     # mapInPandas pass to one core; at production scale the Iceberg scan has
     # >> cores splits and this is a no-op.
     source = ensure_parallelism(documents.select("url", "html"))
-    if not two_pass:
-        return source.mapInPandas(_extract_batches, schema=EXTRACTION_SCHEMA)
-
-    is_pdf = is_pdf_payload_col("html")
-    html_leg = source.filter(~F.coalesce(is_pdf, F.lit(False))).mapInPandas(
-        _extract_batches, schema=EXTRACTION_SCHEMA
-    )
-    pdf_leg = source.filter(F.coalesce(is_pdf, F.lit(False))).mapInPandas(
-        _extract_batches, schema=EXTRACTION_SCHEMA
-    )
-    return html_leg.unionByName(pdf_leg)
+    return source.mapInPandas(_extract_batches, schema=EXTRACTION_SCHEMA)
 
 
 #: Per-block scoring rows — the Readability/Boilerpipe decision surface

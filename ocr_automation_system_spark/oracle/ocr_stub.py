@@ -97,9 +97,9 @@ _STUB_FALLBACK = _StubModel()
 #: singleton (`core/ocr_engine.py:6-11`); here it is recorded so a real
 #: deployment can read the number per worker instead of trusting the
 #: claim. Stub init is ~0; real PaddleOCR init is seconds — which is why
-#: the OCR leg runs as a filtered second pass (the model never builds in
-#: workers that only see clean batches) and spark.python.worker.reuse
-#: keeps it alive across tasks.
+#: the build is lazy (a worker builds it at its first scanned PDF, never
+#: for a clean batch) and spark.python.worker.reuse keeps it alive across
+#: tasks, so the single extraction pass pays it once per worker.
 MODEL_INIT_SECONDS: float = 0.0
 
 

@@ -4,7 +4,7 @@ The reference parses PDFs with PyMuPDF and falls back to PaddleOCR when the
 text leg is unusable (`/root/reference/project/core/pdf_text.py:4-16`,
 `core/ocr_engine.py:26-70`). Neither library ships in this container, so —
 per the build instructions — the *decode* step is stubbed while the Spark
-plumbing (schema, two-pass execution, batch shape) is real:
+plumbing (schema, one-pass execution, batch shape) is real:
 
 * Real PDFs: if ``fitz`` (PyMuPDF) is importable we use it; otherwise a
   clearly-marked ``NotImplementedError`` is raised and caught by the caller,

@@ -16,7 +16,7 @@ What this does and doesn't prove:
 
 * the relational stages get a true dual implementation (DuckDB SQL vs Spark
   DataFrame ops) — full differential coverage;
-* the extraction stage's *Spark plumbing* (two-pass leg split, Arrow batch
+* the extraction stage's *Spark plumbing* (one mapInPandas pass, Arrow batch
   transfer, schema mapping, partitioning) is checked against a serial run
   of the same oracle function — the same property
   `tests/test_pipeline_byte_identity.py` asserts, now surfaced through the

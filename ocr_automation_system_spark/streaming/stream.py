@@ -5,9 +5,13 @@ resumable batch job — but a production corpus grows continuously, so the
 engine exposes streaming twins of its batch operators:
 
 * ``stream_documents`` — file-source stream over a documents directory
-  (new parquet drops = new WARC crawls), running the SAME two-pass
-  extraction operator; checkpointing gives exactly-once sink semantics,
-  the streaming analogue of the batch bucket manifest (plans/resume.py).
+  (new parquet drops = new WARC crawls), fed to the SAME batch operator
+  ``operators.extract.extract_documents``: one stateless ``mapInPandas``
+  pass, because the oracle routes each row to its HTML/PDF/OCR leg and the
+  OCR model builds lazily once per reused worker — nothing needs a
+  per-leg filter or union. Checkpointing gives exactly-once sink
+  semantics, the streaming analogue of the batch bucket manifest
+  (plans/resume.py).
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation over
   an event stream (twin of ``functions.windows.tumbling_window_agg``);
   late rows beyond the watermark are dropped instead of recomputing
@@ -25,8 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import EXTRACTION_SCHEMA, _extract_batches, is_pdf_payload_col
-
 DOCUMENTS_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
@@ -39,16 +41,6 @@ def stream_documents(spark: SparkSession, input_dir: str,
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-
-
-def streaming_extraction(documents: DataFrame) -> DataFrame:
-    """Two-pass extraction on a stream. Same mapInPandas body as batch;
-    the leg split is a stateless filter so it streams unchanged."""
-    source = documents.select("url", "html")
-    is_pdf = F.coalesce(is_pdf_payload_col("html"), F.lit(False))
-    html_leg = source.filter(~is_pdf).mapInPandas(_extract_batches, EXTRACTION_SCHEMA)
-    pdf_leg = source.filter(is_pdf).mapInPandas(_extract_batches, EXTRACTION_SCHEMA)
-    return html_leg.unionByName(pdf_leg)
 
 
 def write_extraction_stream(results: DataFrame, output_dir: str,

@@ -26,12 +26,13 @@ from ocr_automation_system_spark.session import build_session  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 COMMENTARY = {
-    "extraction": """Narrow end to end: scan -> leg-split filter (JVM byte test, no Python
-round-trip for routing) -> ArrowEvalPython/mapInPandas -> union. ZERO
-exchanges — extraction throughput scales linearly with executors, which is
-what the N->4N efficiency criterion measures. The `%PDF` magic-byte filter
-appears pushed against the scan of each leg, so the expensive leg reads only
-its subset.""",
+    "extraction": """Narrow end to end: one scan -> one mapInPandas pass. The oracle routes
+each row to its HTML/PDF/OCR leg inside the batch, so there is no leg
+filter, no second pass over the payload column and no union. The only
+exchange is ensure_parallelism's round-robin repartition, which fires on a
+split-starved local input like this one-file corpus and is absent at
+production split counts; extraction throughput scales linearly with
+executors, which is what the N->4N efficiency criterion measures.""",
     "entity_join": """Input is the COMMITTED extraction table (plans/resume.py writes it
 once; each adapter branch re-reads with its doctype filter + pruned columns
 pushed to the scan). Shuffle inventory: one hash exchange per doctype side
@@ -119,7 +120,7 @@ def main() -> None:
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     sections = [
-        ("Extraction (two-pass html+pdf legs)", "extraction", results),
+        ("Extraction (one-pass mapInPandas)", "extraction", results),
         ("Entity join + validation rules", "entity_join",
          run_rules(build_entities(committed))),
         ("MinHash-LSH near-dup pairs", "lsh_pairs",

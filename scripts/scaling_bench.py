@@ -18,8 +18,8 @@ Target >= 0.8. Two modes:
   separate GCs and Python worker pools, module shipping via the package
   zip, and the repartition shuffle crossing executor boundaries at 4N.
 
-The measured stage is the full two-pass extraction operator (html + pdf
-legs, mapInPandas), which is shuffle-free — the property that makes
+The measured stage is the full extraction operator (one mapInPandas pass
+that routes html / pdf / ocr per row), which is shuffle-free — the property that makes
 linear scaling possible at all.
 
 Usage: ``python scripts/scaling_bench.py [--rows 24000] [--standalone]``
@@ -423,7 +423,7 @@ def main() -> int:
 
 North-rule criterion: throughput scaling efficiency >= 0.8 between N and
 4N executors. Sandbox evidence (no real cluster, per driver instruction):
-the identical extraction job (two-pass html+pdf mapInPandas over the
+the identical extraction job (one-pass mapInPandas over the
 deterministic synthetic corpus) at two parallelism levels on this 32-core
 host, CPU-affinity-pinned so each simulated cluster size owns exactly its
 cores, best of 5 warmed runs.
@@ -442,7 +442,7 @@ control's efficiency: the pipeline-attributable scaling figure.
 {row}
 
 Why extraction scales: it is a narrow (shuffle-free) pipeline — scan ->
-leg-split filter -> mapInPandas — so adding executors adds independent
+mapInPandas — so adding executors adds independent
 lanes; the only non-scaling costs are job scheduling and the Arrow batch
 hand-off.
 Reproduce: `python scripts/scaling_bench.py [--rows R --low N --high 4N]`.

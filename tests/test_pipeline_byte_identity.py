@@ -49,12 +49,14 @@ def test_extraction_covers_all_statuses(spark, corpus_path):
     assert stats.get("unusable", 0) > 0  # junk + corrupt rows exercised
 
 
-def test_single_pass_equals_two_pass(spark, corpus_path):
-    documents = spark.read.parquet(corpus_path)
-    two = extract_documents(documents, two_pass=True).toPandas().set_index("url").sort_index()
-    one = extract_documents(documents, two_pass=False).toPandas().set_index("url").sort_index()
-    assert (two["extracted_text"] == one["extracted_text"]).all()
-    assert (two["fields_json"] == one["fields_json"]).all()
+def test_extraction_is_one_pass_over_one_scan(spark, corpus_path):
+    """Every row goes through one mapInPandas over one scan of the
+    documents: the oracle routes HTML/PDF/OCR per row, so no leg filter,
+    second pass or union appears in the executed plan."""
+    plan = (extract_documents(spark.read.parquet(corpus_path))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("FileScan parquet") == 1, plan
 
 
 def test_metrics_totals(spark, corpus_path):

@@ -436,27 +436,6 @@ def _cdc_replay(text, w=8, divisor=16):
             for j in range(1, len(bounds))]
 
 
-def _cdc_replay_md5(text, w=8, divisor=16):
-    """Pure-Python replay of the LEGACY md5-gram boundary contract
-    (cdc_chunks_md5 — the round-4 kernel kept as the contract twin)."""
-    import hashlib
-
-    t = text or ""
-    n = len(t)
-    cuts = []
-    for i in range(1, n - w + 2):
-        h = int(hashlib.md5(t[i - 1:i - 1 + w].encode()).hexdigest()[:8],
-                16)
-        if h % divisor == 0 and i + w - 1 < n:
-            cuts.append(i + w - 1)
-    bounds = [0] + cuts + [n]
-    if n == 0:
-        return []
-    return [(j, bounds[j - 1] + 1, bounds[j] - bounds[j - 1],
-             hashlib.md5(t[bounds[j - 1]:bounds[j]].encode()).hexdigest())
-            for j in range(1, len(bounds))]
-
-
 def test_cdc_chunks_match_replay_and_cover(spark):
     """Chunks equal the Python boundary replay exactly and tile the
     document: starts/lengths are contiguous from 1 to len(text)."""
@@ -501,32 +480,6 @@ def test_gear_table_pinned():
     assert G[255] == int(hashlib.md5(b"ff").hexdigest()[:8], 16)
     # window-sum budget: 8 terms, weights up to 128 -> < 2^43
     assert max(G) * sum(1 << j for j in range(8)) < 2 ** 63
-
-
-def test_cdc_chunks_md5_legacy_kernel_matches_its_replay(spark):
-    """The round-4 md5-gram kernel survives as cdc_chunks_md5 (the
-    legacy contract twin): it still matches ITS pure-Python replay and
-    tiles the document — and its boundaries are a different (also
-    content-defined) cut set than the gear kernel's."""
-    from ocr_automation_system_spark.functions.curation import (
-        cdc_chunks, cdc_chunks_md5,
-    )
-
-    rows = [(1, "the quick brown fox jumps over the lazy dog again and "
-                "again until the boundary rule fires somewhere inside"),
-            (2, ""), (3, None), (4, "tiny")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {}
-    for r in cdc_chunks_md5(df).collect():
-        got.setdefault(r["doc_id"], []).append(
-            (r["chunk_idx"], r["start"], r["length"], r["chunk_md5"]))
-    for did, text in rows:
-        assert sorted(got.get(did, [])) == _cdc_replay_md5(text)
-    # the two kernels are distinct cut laws over the same text
-    gear_cuts = {(r["chunk_idx"], r["start"])
-                 for r in cdc_chunks(df).collect() if r["doc_id"] == 1}
-    md5_cuts = {(i, s) for i, s, _l, _h in got[1]}
-    assert gear_cuts != md5_cuts
 
 
 def test_cdc_chunks_survive_byte_insertion(spark):

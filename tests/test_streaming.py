@@ -14,8 +14,7 @@ from ocr_automation_system_spark.corpus import generate_corpus
 from ocr_automation_system_spark.functions.windows import tumbling_window_agg
 from ocr_automation_system_spark.operators.extract import extract_documents
 from ocr_automation_system_spark.streaming.stream import (
-    stream_documents, streaming_extraction, windowed_event_counts,
-    write_extraction_stream,
+    stream_documents, windowed_event_counts, write_extraction_stream,
 )
 
 
@@ -31,7 +30,7 @@ def doc_dir(tmp_path):
 
 
 def _run_stream(spark, d, out, ckpt):
-    stream = streaming_extraction(stream_documents(spark, d))
+    stream = extract_documents(stream_documents(spark, d))
     q = write_extraction_stream(stream, out, ckpt)
     q.awaitTermination(120)
     return spark.read.parquet(out)
@@ -70,7 +69,7 @@ def test_host_quality_monitor_stateful(spark, doc_dir, tmp_path):
                                coerce_timestamps="us", allow_truncated_timestamps=True)
 
     monitored = host_quality_monitor(
-        streaming_extraction(stream_documents(spark, d, max_files_per_trigger=1)))
+        extract_documents(stream_documents(spark, d, max_files_per_trigger=1)))
     q = (monitored.writeStream.format("parquet")
          .option("path", out).option("checkpointLocation", ckpt)
          .outputMode("append").trigger(availableNow=True).start())
