@@ -19,7 +19,7 @@ from .text import (
     bind_array, bpe_token_count, clean_text, lazy_seq, positional_grams,
     quality_score, shingles, ws_token_count, ws_tokens,
 )
-from .util import ensure_parallelism
+from .util import drop_overcap_keys, ensure_parallelism
 
 
 def split_bucket(col, buckets: int = 1000):
@@ -1715,8 +1715,8 @@ def cdc_chunk_set(df: DataFrame, id_col: str = "doc_id",
       kernel IS the global distinct and the distinct
       Exchange+HashAggregate disappears entirely. A caller whose
       input may REPEAT an id (a snapshot union, a fanned-out join)
-      must add its own ``dropDuplicates`` (see
-      :func:`cdc_dup_pairs`'s ``ids_unique=False``);
+      must add its own ``dropDuplicates`` (as :func:`cdc_dup_pairs`
+      does);
     * ``extra_cols`` (e.g. ``("source",)``) ride through the kernel
       row-locally, so consumers grouping by a doc attribute skip the
       (id -> attribute) join as well.
@@ -1823,8 +1823,7 @@ def cdc_dup_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", w: int = CDC_W,
                   divisor: int = CDC_DIVISOR,
                   min_shared: int = 2,
-                  max_docs_per_chunk: int = 64,
-                  ids_unique: bool = True) -> DataFrame:
+                  max_docs_per_chunk: int = 64) -> DataFrame:
     """Shifted near-copy pairs via shared content-defined chunks:
     (doc_a, doc_b, n_shared_chunks, shared_chars). Because ``cdc_chunks``
     boundaries are content-keyed, a re-crawled page with an inserted ad
@@ -1849,21 +1848,13 @@ def cdc_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     # `cached` handle on the returned frame (bag_jaccard contract).
     # cdc_chunk_set dedups per doc INSIDE the kernel, which equals the
     # global distinct only while each id appears in ONE input row (see
-    # its docstring). ids_unique=True (every in-repo caller: the
-    # documents table and the curate ladder key rows by id) skips the
-    # distinct Exchange; pass ids_unique=False for snapshot unions /
-    # fanned-out joins, where duplicate rows would otherwise double
-    # n_shared_chunks and mis-fire the occupancy cap.
-    cached = cdc_chunk_set(df, id_col=id_col, text_col=text_col, w=w,
-                           divisor=divisor)
-    if not ids_unique:
-        cached = cached.dropDuplicates([id_col, "chunk_md5"])
-    cached = cached.persist()
-    over = (cached.groupBy("chunk_md5")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_docs_per_chunk)
-            .select("chunk_md5"))
-    ch = cached.join(F.broadcast(over), "chunk_md5", "left_anti")
+    # its docstring); the dropDuplicates keeps a repeated id (snapshot
+    # union, fanned-out join) from doubling n_shared_chunks and
+    # mis-firing the occupancy cap.
+    cached = (cdc_chunk_set(df, id_col=id_col, text_col=text_col, w=w,
+                            divisor=divisor)
+              .dropDuplicates([id_col, "chunk_md5"]).persist())
+    ch = drop_overcap_keys(cached, "chunk_md5", max_docs_per_chunk)
     a = ch.select(F.col(id_col).alias("doc_a"), "chunk_md5",
                   F.col("length").alias("_len"))
     b = ch.select(F.col(id_col).alias("doc_b"), "chunk_md5")
@@ -1968,11 +1959,7 @@ def winnow_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     anti-join before the self-equi-join."""
     fps = (winnow_fingerprints(df, id_col=id_col, text_col=text_col)
            .select(id_col, "fp").distinct().persist())
-    over = (fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_docs_per_fp)
-            .select("fp"))
-    surv = fps.join(F.broadcast(over), "fp", "left_anti")
+    surv = drop_overcap_keys(fps, "fp", max_docs_per_fp)
     a = surv.select(F.col(id_col).alias("doc_a"), "fp")
     b = surv.select(F.col(id_col).alias("doc_b"), "fp")
     res = (a.join(b, "fp")
@@ -2005,11 +1992,7 @@ def winnow_shared_extents(df: DataFrame, id_col: str = "doc_id",
            .groupBy(id_col, "fp")
            .agg(F.min("pos").alias("_lo"), F.max("pos").alias("_hi"))
            .persist())
-    over = (fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_docs_per_fp)
-            .select("fp"))
-    surv = fps.join(F.broadcast(over), "fp", "left_anti")
+    surv = drop_overcap_keys(fps, "fp", max_docs_per_fp)
     a = surv.select(F.col(id_col).alias("doc_a"), "fp",
                     F.col("_lo").alias("_alo"), F.col("_hi").alias("_ahi"))
     b = surv.select(F.col(id_col).alias("doc_b"), "fp",
@@ -2089,11 +2072,7 @@ def write_winnow_index(df: DataFrame, path: str, id_col: str = "doc_id",
     stream by the winnowing density bound."""
     fps = (winnow_fingerprints(df, id_col=id_col, text_col=text_col)
            .select(F.col(id_col).alias("doc_id"), "fp").distinct())
-    over = (fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_docs_per_fp)
-            .select("fp"))
-    (fps.join(F.broadcast(over), "fp", "left_anti")
+    (drop_overcap_keys(fps, "fp", max_docs_per_fp)
      .write.mode("overwrite").parquet(os.path.join(path, "fps")))
 
 

@@ -200,8 +200,9 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     if cache_index:
         # Both self-join sides read the same band table; without a persist
         # each side re-runs tokenize->shingle->hash over the corpus. At
-        # production scale the index is WRITTEN once as a table instead —
-        # this is the in-session equivalent (tiny: ~bands rows per doc).
+        # production scale the index is WRITTEN once as a table instead
+        # (``write_dedup_index``) — this is the in-session equivalent
+        # (tiny: ~bands rows per doc).
         bt = bt.persist()
     a, b = bt.alias("a"), bt.alias("b")
     return (
@@ -212,38 +213,11 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def write_minhash_index(df: DataFrame, path: str, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = 3, bands: int = 4,
-                        rows_per_band: int = 2) -> None:
-    """Materialize the LSH band table as a parquet index partitioned by
-    band — the production form of ``cache_index=True``: signatures are
-    computed ONCE per corpus (the expensive tokenize->shingle->md5 pass),
-    then every dedup run, incremental join, or point lookup reads the
-    index instead of recomputing. Partitioning by band means a band-keyed
-    query prunes 3/4 of the files before reading a byte."""
-    (minhash_bands(df, id_col, text_col, n, bands, rows_per_band)
-     .write.mode("overwrite").partitionBy("band").parquet(path))
-
-
-def candidate_pairs_from_index(spark, path: str) -> DataFrame:
-    """Distinct candidate pairs from a written band index — identical
-    output to ``lsh_candidate_pairs`` over the source corpus (pinned by
-    test), without touching the text again."""
-    bt = spark.read.parquet(path)
-    a, b = bt.alias("a"), bt.alias("b")
-    return (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
 def minhash_recall_sample(df: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text", sample_hex_lt: int = 5,
+                          text_col: str = "text", sample_target: int = 256,
                           threshold: float = 0.5, n: int = 3,
-                          bands: int = 4, rows_per_band: int = 2,
-                          sample_target: int | None = None) -> DataFrame:
+                          bands: int = 4,
+                          rows_per_band: int = 2) -> DataFrame:
     """LSH quality diagnostic: banded-candidate RECALL against exact
     Jaccard, measured on a deterministic md5 sample. Returns
     per-Jaccard-band (floor(10j)) true-pair and caught-pair counts —
@@ -252,32 +226,23 @@ def minhash_recall_sample(df: DataFrame, id_col: str = "doc_id",
 
     The exact all-pairs pass runs INSIDE the sample only — that is the
     point: recall estimation is the one place quadratic work is
-    justified, and the sample is the knob. ``sample_target`` (the
-    production mode) bounds the sample by SIZE, not rate: keep a row
-    iff its 32-bit md5 fraction < floor(least(1, target/N)·2^32) — N
+    justified. The sample is bounded by SIZE, not rate: keep a row iff
+    its 32-bit md5 fraction < floor(least(1, sample_target/N)·2^32) — N
     attached as a broadcast 1-row count, every float op
     correctly-rounded (the ``alpha_sample`` discipline), so the sample
     is deterministic cross-engine AND the quadratic cost stays
-    ~target² no matter how the corpus grows. A fixed RATE
-    (``sample_hex_lt``/16, the legacy mode, used when
-    ``sample_target=None``) silently scales the quadratic pass with
-    corpus size squared — measured 60s at 5k docs where the
-    size-bounded mode holds ~2s at any scale."""
-    if sample_target is not None:
-        nrow = df.agg(F.count(F.lit(1)).alias("_n"))
-        thr = F.floor(
-            F.least(F.lit(1.0),
-                    F.lit(float(sample_target))
-                    / F.col("_n").cast("double"))
-            * F.lit(4294967296.0)).cast("long")
-        h32 = F.conv(F.substring(F.md5(F.col(id_col).cast("string")),
-                                 1, 8), 16, 10).cast("long")
-        samp = (df.crossJoin(F.broadcast(nrow))
-                .filter(h32 < thr).drop("_n"))
-    else:
-        samp = df.filter(
-            F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 1),
-                   16, 10).cast("long") < sample_hex_lt)
+    ~sample_target² no matter how the corpus grows (a fixed rate would
+    scale it with corpus size squared)."""
+    nrow = df.agg(F.count(F.lit(1)).alias("_n"))
+    thr = F.floor(
+        F.least(F.lit(1.0),
+                F.lit(float(sample_target))
+                / F.col("_n").cast("double"))
+        * F.lit(4294967296.0)).cast("long")
+    h32 = F.conv(F.substring(F.md5(F.col(id_col).cast("string")),
+                             1, 8), 16, 10).cast("long")
+    samp = (df.crossJoin(F.broadcast(nrow))
+            .filter(h32 < thr).drop("_n"))
     sh = (samp.select(F.col(id_col).alias("doc_id"),
                       shingles(F.col(text_col), n).alias("sh"))
           .filter(F.size("sh") > 0))
@@ -302,10 +267,11 @@ def minhash_recall_sample(df: DataFrame, id_col: str = "doc_id",
 def write_dedup_index(df: DataFrame, path: str, id_col: str = "doc_id",
                       text_col: str = "text", n: int = 3, bands: int = 4,
                       rows_per_band: int = 2) -> None:
-    """The incremental-dedup artifact: band table (partitioned by band,
-    as ``write_minhash_index``) PLUS the shingle store the exact-Jaccard
-    verify pass reads. Written once per corpus snapshot; every later
-    snapshot dedups against it without touching corpus text again."""
+    """The incremental-dedup artifact: the ``minhash_bands`` table,
+    partitioned by band so a band-keyed read prunes the other bands'
+    files, PLUS the shingle store the exact-Jaccard verify pass reads.
+    Written once per corpus snapshot; every later snapshot dedups
+    against it without touching corpus text again."""
     (minhash_bands(df, id_col, text_col, n, bands, rows_per_band)
      .write.mode("overwrite").partitionBy("band")
      .parquet(os.path.join(path, "bands")))

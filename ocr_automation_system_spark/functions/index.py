@@ -312,37 +312,6 @@ def collocations(df: DataFrame, id_col: str = "doc_id",
         (p_xy / (p_x * p_y)).alias("score"))
 
 
-def write_postings_index(df: DataFrame, path: str, id_col: str = "doc_id",
-                         text_col: str = "text", cap: int = POSTINGS_CAP,
-                         n_buckets: int = 64) -> None:
-    """Materialize the inverted index as parquet bucketed by a stable
-    md5-derived token bucket — the production form: the expensive
-    tokenize -> distinct -> rank pass runs ONCE per corpus snapshot,
-    then term lookups and index merges read only the matching bucket
-    files (1/n_buckets of the bytes). Bucket = first 2 md5 hex chars of
-    the token mod n_buckets, so the same token always lands in the same
-    file set across snapshots — incremental merges co-locate without a
-    shuffle."""
-    (token_postings(df, id_col, text_col, cap)
-     .withColumn("bucket",
-                 F.pmod(F.conv(F.substring(F.md5("token"), 1, 2), 16, 10)
-                        .cast("long"), F.lit(n_buckets)))
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-
-
-def lookup_postings(spark, path: str, token: str,
-                    n_buckets: int = 64) -> DataFrame:
-    """Point lookup against a written postings index: computes the
-    token's bucket driver-side and reads ONLY that partition directory
-    (partition pruning on the bucket column, then a token filter pushed
-    to the parquet scan)."""
-    import hashlib
-
-    b = int(hashlib.md5(token.encode()).hexdigest()[:2], 16) % n_buckets
-    return (spark.read.parquet(path)
-            .filter((F.col("bucket") == b) & (F.col("token") == token)))
-
-
 def skipgram_pairs(df: DataFrame, text_col: str = "text",
                    window: int = 3, k: int = 100) -> DataFrame:
     """Window-k co-occurrence census — the (center, context) pair counts
@@ -427,9 +396,9 @@ def _bm25_rank(qtf: DataFrame, qdf: DataFrame, dl: DataFrame,
                terms: list, wmap: dict, k: int, k1: float,
                b: float) -> DataFrame:
     """Shared BM25 ranking tail: the SAME expression tree whether the
-    (tf, df, dl) inputs come from a corpus scan (``bm25_search``) or
-    from stored index artifacts (``bm25_from_index``) — structural
-    guarantee that the two paths agree bit-for-bit."""
+    (tf, df, dl) inputs come from a document body (``bm25_search``) or
+    from incoming anchor text (``anchor_bm25_search``), so both fields
+    rank on one bit-reproducible scale."""
     stats = dl.agg(F.count(F.lit(1)).alias("_n"),
                    F.sum("dl").alias("_tot"))
     avgdl = (F.col("_tot").cast("double") / F.col("_n").cast("double"))
@@ -499,51 +468,6 @@ def anchor_bm25_search(edges: DataFrame, query_terms: list, k: int = 10,
     return _bm25_rank(qtf, qdf, dl, terms, wmap, k, k1, b)
 
 
-def write_doclen_table(df: DataFrame, path: str, id_col: str = "doc_id",
-                       text_col: str = "text") -> None:
-    """Doc-length artifact (doc_id, dl) — the BM25 normalizer table a
-    production index build writes next to the positional index, so
-    query-time never re-tokenizes the corpus. Thin (2 columns), one
-    map-side-combined groupBy."""
-    from .lm import tokens_lower
-
-    (ensure_parallelism(df)
-     .select(F.col(id_col).alias("doc_id"),
-             F.explode(tokens_lower(F.col(text_col))).alias("token"))
-     .groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-     .write.mode("overwrite").parquet(path))
-
-
-def bm25_from_index(spark, index_path: str, dl_path: str,
-                    query_terms: list, k: int = 10, k1: float = 1.2,
-                    b: float = 0.75, weights: dict | None = None,
-                    n_buckets: int = 64) -> DataFrame:
-    """BM25 against STORED artifacts: tf comes from the positional
-    index (``size(positions)``, reading ONLY the query terms' buckets —
-    partition pruning + token pushdown), dl/N/avgdl from the doc-length
-    table. Identical ranking contract to the scan-based ``bm25_search``
-    (shared ``_bm25_rank`` tail, parity pinned by test) — at corpus
-    scale this turns the full tokenize pass into a few bucket reads
-    plus one uniform doc_id join against the thin dl table."""
-    import hashlib
-
-    terms = sorted({t for qt in query_terms for t in query_tokens(qt)})
-    if not terms:
-        raise ValueError("bm25_from_index needs at least one "
-                         "tokenizable term")
-    wmap = {t: float((weights or {}).get(t, 1.0)) for t in terms}
-    buckets = sorted({int(hashlib.md5(t.encode()).hexdigest()[:2], 16)
-                      % n_buckets for t in terms})
-    idx = (spark.read.parquet(index_path)
-           .filter(F.col("bucket").isin(buckets)
-                   & F.col("token").isin(terms)))
-    qtf = idx.select("doc_id", "token",
-                     F.size("positions").cast("long").alias("tf"))
-    qdf = qtf.groupBy("token").agg(F.count(F.lit(1)).alias("df_docs"))
-    dl = spark.read.parquet(dl_path).select("doc_id", "dl")
-    return _bm25_rank(qtf, qdf, dl, terms, wmap, k, k1, b)
-
-
 def kwic_snippets(df: DataFrame, term: str, width: int = 40,
                   id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
@@ -600,9 +524,7 @@ def phrase_hits(df: DataFrame, phrase: str, id_col: str = "doc_id",
     """Exact-phrase match positions per document (token-adjacency, the
     quoted-query primitive): returns (doc_id, n_hits, first_pos) for
     matching docs. Phrase matching against a document is ROW-LOCAL, so
-    this is a narrow zero-shuffle projection — the positional-index
-    join shape only pays off once the index is precomputed; against raw
-    text this plan strictly dominates."""
+    this is a narrow zero-shuffle projection."""
     from .lm import tokens_lower
     from .text import bind_array, lazy_seq
 
@@ -624,67 +546,6 @@ def phrase_hits(df: DataFrame, phrase: str, id_col: str = "doc_id",
 
     hits = bind_array(tokens_lower(F.col(text_col)), _hits)
     return (df.select(F.col(id_col).alias("doc_id"), hits.alias("_h"))
-            .filter(F.size("_h") > 0)
-            .select("doc_id",
-                    F.size("_h").cast("long").alias("n_hits"),
-                    F.element_at("_h", 1).cast("long").alias("first_pos")))
-
-
-def write_positional_index(df: DataFrame, path: str,
-                           id_col: str = "doc_id",
-                           text_col: str = "text",
-                           n_buckets: int = 64) -> None:
-    """Positional inverted index artifact: (token, doc_id, positions)
-    parquet partitioned by the same stable md5 token bucket as
-    ``write_postings_index`` — phrase/proximity queries then read ONLY
-    the buckets of their query terms. Positions are 1-based token
-    offsets, sorted; the expensive tokenize pass runs once per corpus
-    snapshot."""
-    toks = (ensure_parallelism(df)
-            .select(F.col(id_col).alias("doc_id"),
-                    F.posexplode(tokens_lower(F.col(text_col)))
-                    .alias("pos0", "token")))
-    positional = (toks
-                  .groupBy("token", "doc_id")
-                  .agg(F.sort_array(F.collect_list(F.col("pos0") + 1))
-                       .alias("positions")))
-    (positional
-     .withColumn("bucket",
-                 F.pmod(F.conv(F.substring(F.md5("token"), 1, 2), 16, 10)
-                        .cast("long"), F.lit(n_buckets)))
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-
-
-def phrase_hits_from_index(spark, path: str, phrase: str,
-                           n_buckets: int = 64) -> DataFrame:
-    """Quoted-phrase search against the STORED positional index: reads
-    only the query terms' buckets (partition pruning + token pushdown),
-    then adjacency-joins consecutive terms' position lists doc-by-doc.
-    Identical output contract to the raw-text ``phrase_hits``
-    (doc_id, n_hits, first_pos) — parity pinned by test."""
-    import hashlib
-    from functools import reduce
-
-    words = query_tokens(phrase)
-    if not words:
-        raise ValueError("phrase_hits_from_index needs a non-empty phrase")
-    idx = spark.read.parquet(path)
-
-    def term_df(w: str, d: int) -> DataFrame:
-        b = int(hashlib.md5(w.encode()).hexdigest()[:2], 16) % n_buckets
-        return (idx.filter((F.col("bucket") == b) & (F.col("token") == w))
-                .select("doc_id",
-                        F.col("positions").alias(f"p{d}")))
-
-    cur = term_df(words[0], 0)
-    for d, w in enumerate(words[1:], start=1):
-        cur = cur.join(term_df(w, d), "doc_id")
-    # adjacency: position i starts a hit iff every term d has i+d
-    hit_positions = F.filter(
-        F.col("p0"),
-        lambda i: reduce(lambda acc, d: acc & F.array_contains(
-            F.col(f"p{d}"), i + d), range(1, len(words)), F.lit(True)))
-    return (cur.select("doc_id", hit_positions.alias("_h"))
             .filter(F.size("_h") > 0)
             .select("doc_id",
                     F.size("_h").cast("long").alias("n_hits"),
@@ -738,50 +599,6 @@ def proximity_hits(df: DataFrame, term_a: str, term_b: str,
                     F.array_min("_d").cast("long").alias("min_dist")))
 
 
-def proximity_hits_from_index(spark, path: str, term_a: str, term_b: str,
-                              max_dist: int = 5,
-                              n_buckets: int = 64) -> DataFrame:
-    """NEAR/k search against the STORED positional index written by
-    ``write_positional_index``: reads ONLY the two query terms' buckets
-    (partition pruning + token pushdown — the same pruned-read shape as
-    ``phrase_hits_from_index``), then crosses the two (bounded) position
-    lists per doc inside one codegen expression. Identical output
-    contract to the raw-text ``proximity_hits`` (doc_id, n_hits,
-    min_dist) — parity pinned by test. At corpus scale this turns a
-    full-text scan into two bucket reads plus one uniform doc_id join."""
-    import hashlib
-
-    ta, tb = query_tokens(term_a), query_tokens(term_b)
-    if len(ta) != 1 or len(tb) != 1:
-        raise ValueError("proximity_hits_from_index terms must each "
-                         f"normalize to one token, got {ta!r} and {tb!r}")
-    a, b = ta[0], tb[0]
-    idx = spark.read.parquet(path)
-
-    def term_df(w: str, col: str) -> DataFrame:
-        bk = int(hashlib.md5(w.encode()).hexdigest()[:2], 16) % n_buckets
-        return (idx.filter((F.col("bucket") == bk) & (F.col("token") == w))
-                .select("doc_id", F.col("positions").alias(col)))
-
-    if a == b:
-        # one bucket read; unordered pairs within one list, each once
-        cur = term_df(a, "pa")
-        dists = F.flatten(F.transform(
-            F.col("pa"), lambda i: F.transform(
-                F.filter(F.col("pa"), lambda j: j > i), lambda j: j - i)))
-    else:
-        cur = term_df(a, "pa").join(term_df(b, "pb"), "doc_id")
-        dists = F.flatten(F.transform(
-            F.col("pa"),
-            lambda i: F.transform(F.col("pb"), lambda j: F.abs(i - j))))
-    hits = F.filter(dists, lambda d: d <= max_dist)
-    return (cur.select("doc_id", hits.alias("_d"))
-            .filter(F.size("_d") > 0)
-            .select("doc_id",
-                    F.size("_d").cast("long").alias("n_hits"),
-                    F.array_min("_d").cast("long").alias("min_dist")))
-
-
 def boolean_search(df: DataFrame, must: list, must_not: list = (),
                    id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
@@ -825,47 +642,3 @@ def boolean_search(df: DataFrame, must: list, must_not: list = (),
             .select("doc_id",
                     F.col("_r.occ").cast("long")
                     .alias("n_must_occurrences")))
-
-
-def boolean_from_index(spark, path: str, must: list, must_not: list = (),
-                       n_buckets: int = 64) -> DataFrame:
-    """Boolean retrieval against the STORED positional index (which
-    keeps FULL membership — unlike the capped postings heads): must
-    terms intersect by doc_id equi-joins, must_not terms drop via ONE
-    broadcastable anti-join over their unioned doc lists; occurrence
-    totals come from the stored position-list sizes. Identical output
-    contract to the raw-text ``boolean_search`` — parity pinned by
-    test. Reads ONLY the query terms' buckets (partition pruning +
-    token pushdown)."""
-    import hashlib
-    from functools import reduce
-
-    def one(term: str, side: str) -> str:
-        ts = query_tokens(term)
-        if len(ts) != 1:
-            raise ValueError(f"boolean_from_index {side} terms must "
-                             f"each normalize to one token, got {ts!r}")
-        return ts[0]
-
-    m = [one(t, "must") for t in must]
-    n = [one(t, "must_not") for t in must_not]
-    if not m:
-        raise ValueError("boolean_from_index needs >= 1 must term")
-    idx = spark.read.parquet(path)
-
-    def term_df(w: str, col: str) -> DataFrame:
-        bk = int(hashlib.md5(w.encode()).hexdigest()[:2], 16) % n_buckets
-        return (idx.filter((F.col("bucket") == bk) & (F.col("token") == w))
-                .select("doc_id", F.size("positions").alias(col)))
-
-    cur = term_df(m[0], "c0")
-    for d, w in enumerate(m[1:], start=1):
-        cur = cur.join(term_df(w, f"c{d}"), "doc_id")
-    if n:
-        ban = reduce(lambda a, b: a.unionByName(b),
-                     [term_df(w, "cx").select("doc_id") for w in n])
-        cur = cur.join(ban, "doc_id", "left_anti")
-    occ = reduce(lambda a, d: a + F.col(f"c{d}"),
-                 range(1, len(m)), F.col("c0"))
-    return cur.select("doc_id",
-                      occ.cast("long").alias("n_must_occurrences"))

@@ -2,12 +2,14 @@
 
 Two tiers:
 
-* **Brute-force cosine top-k** — the exactness baseline. One broadcast of
-  the query vector; the scan stays narrow; top-k is a single
-  ``orderBy().limit()`` (Spark's TakeOrdered — no full sort at scale).
-* **LSH-bucketed ANN** — sign-bit bucketing on the leading dimensions
+* **Brute-force cosine top-k** — the exactness baseline: ``cosine``
+  against a broadcast query vector; the scan stays narrow; top-k is a
+  single ``orderBy().limit()`` (Spark's TakeOrdered — no full sort at
+  scale). The registry's ``embedding_topk`` queries compose it.
+* **LSH-bucketed ANN** — ``sign_bucket`` on the leading dimensions
   (axis-aligned random-hyperplane LSH with deterministic planes, so the
-  DuckDB oracle can replicate it): candidates are only same-bucket rows, so
+  DuckDB oracle can replicate it) or ``plane_bucket_vec`` over seeded
+  random planes: candidates are only same-bucket rows, so
   the search cost per query is the bucket size, not the corpus size. At
   10^12 rows the bucket table is the ANN index — write it once, hash-
   partitioned by bucket, and every query is a partition-pruned lookup.
@@ -258,20 +260,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def cosine_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k by cosine against a literal query vector.
-
-    The query vector is a plan literal (broadcast by construction); the
-    only wide operation is TakeOrdered(k). Ties break on id for
-    determinism. Returns (vec_id, cos_sim rounded to 6)."""
-    scored = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.round(cosine_vs_query(F.col(vec_col), query_vec), 6).alias("cos_sim"),
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id")).limit(k)
-
-
 def sign_bucket(vec: Column, n_bits: int = 16) -> Column:
     """LSH bucket id: sign bits of the first ``n_bits`` dimensions packed
     into an int. Axis-aligned hyperplanes — the cheapest oracle-replicable
@@ -355,35 +343,6 @@ def lsh_bucket_stats(embeddings: DataFrame, n_bits: int = 16,
         .agg(F.count(F.lit(1)).alias("n_vecs"),
              F.min("vec_id").alias("min_vec_id"))
     )
-
-
-def lsh_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-             n_bits: int = 8, probe_hamming: int = 0, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k: score only LSH buckets within ``probe_hamming`` bits of
-    the query's bucket.
-
-    ``probe_hamming=0`` probes exactly one bucket (fastest, lowest recall);
-    ``=1`` is classic multi-probe — the query bucket plus its n_bits
-    single-bit-flip neighbors, trading (n_bits+1)x candidates for recall.
-    The predicate stays a plain column filter (popcount of an XOR) —
-    partition-prunable when the index table is partitioned by bucket."""
-    q = [float(x) for x in query_vec]
-    # mirror sign_bucket's try_element_at: dims beyond len(q) are 0-bits
-    q_bucket = sum(2 ** (n_bits - 1 - i)
-                   for i in range(min(n_bits, len(q))) if q[i] > 0)
-    bucket = sign_bucket(F.col(vec_col), n_bits)
-    if probe_hamming <= 0:
-        pred = bucket == F.lit(q_bucket)
-    else:
-        pred = F.bit_count(bucket.bitwiseXOR(F.lit(q_bucket))) <= probe_hamming
-    scored = (
-        embeddings
-        .filter(pred)
-        .select(F.col(id_col).alias("vec_id"),
-                F.round(cosine_vs_query(F.col(vec_col), q), 6).alias("cos_sim"))
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id")).limit(k)
 
 
 def lsh_topk_multitable(embeddings: DataFrame, query_vec: list[float],

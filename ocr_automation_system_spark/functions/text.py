@@ -637,25 +637,6 @@ def shingle_hashes(shingle_col: Column) -> Column:
     )
 
 
-def minhash_value(hash_arr: Column, i: int) -> Column:
-    """Min-hash i over a pre-materialized base-hash array (see
-    ``shingle_hashes``): ``min((A[i]*h + C[i]) mod P)``, sentinel
-    MINHASH_P for an empty shingle set.
-
-    The hash array must live in its own Project (materialized column) so
-    each of the n min-hash expressions re-reads it instead of re-running
-    tokenize->shingle->md5 — a plain fold-with-struct-state alternative
-    benched ~8x slower (interpreted struct allocation per element)."""
-    return F.coalesce(
-        F.array_min(F.transform(
-            hash_arr,
-            lambda h: F.pmod(F.lit(MINHASH_A[i]) * F.pmod(h, F.lit(MINHASH_P))
-                             + F.lit(MINHASH_C[i]), F.lit(MINHASH_P)),
-        )),
-        F.lit(MINHASH_P).cast("long"),
-    )
-
-
 def winnow_fingerprint(text: Column, n: int = 3) -> Column:
     """Document fingerprint: lexicographic-min md5 over the shingle set
     (a 1-band minhash — the winnowing 'rolling hash' analogue)."""

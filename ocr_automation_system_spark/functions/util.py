@@ -47,7 +47,7 @@ def _estimated_scan_splits(df: DataFrame) -> int | None:
     return splits
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin rebalance IFF the scan is split-starved.
 
     CPU-bound row-wise operators (shingling, hashing, extraction UDFs) are
@@ -63,7 +63,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         # parallelism is the source's own; leave the plan alone
         return df
     sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = sc.defaultParallelism
     est = _estimated_scan_splits(df)
     if est is not None and est < target:
         return df.repartition(target)

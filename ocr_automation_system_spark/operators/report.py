@@ -110,13 +110,3 @@ def format_report(report_row, entity_row=None) -> str:
     return "\n".join(lines)
 
 
-def status_ordered(validation_results: DataFrame) -> DataFrame:
-    """O4 (`report_generator.py:201-215`): presentation ordering
-    FAIL -> WARNING -> PASS -> SKIPPED via a status-rank map."""
-    rank = (
-        F.when(F.col("status") == FAIL, 0)
-        .when(F.col("status") == WARNING, 1)
-        .when(F.col("status") == PASS, 2)
-        .otherwise(3)
-    )
-    return validation_results.orderBy(rank, "entity_key", "rule_id")

@@ -634,7 +634,7 @@ def structure_principal_address(address: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Approving authority (P22/P23 — `gst_certi.py:935-1059,541-549`)
+# Approving authority (P22 — `gst_certi.py:935-1059`)
 # ---------------------------------------------------------------------------
 
 _AUTHORITY_METHODS: list = [
@@ -738,15 +738,6 @@ def extract_approving_authority(text: str) -> str:
         got = method(text)
         if got:
             return got
-    return ""
-
-
-def validate_authority(authority: str) -> str:
-    """P23 (`gst_certi.py:541-549`)."""
-    if not authority or len(authority) < 10:
-        return ""
-    if "goods and services tax act" in authority.lower() and re.search(r"\d{4}", authority):
-        return authority
     return ""
 
 

@@ -40,6 +40,7 @@ from .functions import text as T
 from .functions import windows as W
 from .functions.links import HTML_SNIFF_RE
 from .functions.multimodal import extract_media_metadata, media_type_summary
+from .functions.util import drop_overcap_keys
 from .operators.adapters import (
     build_entities, checksum_consistency_check, duplicate_id_check, name_sql,
 )
@@ -3634,10 +3635,7 @@ def q_memorization_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("doc_id", "fp").distinct())
     is_gen = F.pmod(F.col("doc_id"), F.lit(173)) == 0
     gf = fps.filter(is_gen).select(F.col("doc_id").alias("gen_id"), "fp")
-    cf0 = fps.filter(~is_gen)
-    hot = (cf0.groupBy("fp").agg(F.count(F.lit(1)).alias("_n"))
-           .filter(F.col("_n") > 64).select("fp"))
-    cf = cf0.join(F.broadcast(hot), "fp", "left_anti")
+    cf = drop_overcap_keys(fps.filter(~is_gen), "fp", 64)
     sh = (gf.join(cf, "fp")
           .groupBy("gen_id", "doc_id")
           .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))

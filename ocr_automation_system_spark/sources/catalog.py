@@ -30,17 +30,7 @@ def load_tables(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> dict:
     return {name: load_table(spark, sf_dir, name) for name in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
-    """Register the tables as temp views for ``spark.sql`` queries."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def write_results(df: DataFrame, path: str, mode: str = "overwrite",
-                  partition_by: list | None = None) -> None:
-    """Result sink (S5). Parquet locally; ``df.writeTo(...).overwritePartitions()``
-    on Iceberg. ``partition_by`` keeps output partition-pruned for readers."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_results(df: DataFrame, path: str) -> None:
+    """Result sink (S5). Parquet overwrite locally;
+    ``df.writeTo(...).overwritePartitions()`` on Iceberg."""
+    df.write.mode("overwrite").parquet(path)

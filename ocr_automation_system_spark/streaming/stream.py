@@ -20,6 +20,13 @@ engine exposes streaming twins of its batch operators:
   ``session_window`` operator (gap-based), the streaming twin of the
   lag/cumsum batch sessionizer.
 
+A batch operator whose plan is already stream-legal gets no twin here: it
+runs on the stream as it is, as ``extract_documents`` does, and so do
+``sketch.doclen_histogram`` and ``sketch.source_checksums`` (bounded-key
+groupBys, run with update/complete output). The twins in this module
+exist where the streaming form differs from the batch plan: watermarked
+state, session windows, stream-static joins.
+
 All transformations are the shared batch column expressions — one
 definition, two execution modes — which is exactly why the engine is
 DataFrame-first."""
@@ -192,46 +199,6 @@ def streaming_content_drift(captures: DataFrame, signatures: DataFrame,
                     F.when(ham == 0, F.lit("identical"))
                     .when(ham <= cosmetic_bits, F.lit("cosmetic"))
                     .otherwise(F.lit("drifted")).alias("drift")))
-
-
-def streaming_doclen_histogram(documents: DataFrame,
-                               text_col: str = "text") -> DataFrame:
-    """Streaming twin of ``sketch.doclen_histogram``: the mergeable
-    length-quantile artifact maintained over arriving crawl drops. The
-    bucket projection is the SAME exact-integer geometry
-    (``sketch.hist_buckets``); the aggregation is a streaming groupBy
-    over the bounded (octave, sub, bucket_lo) key space — at most
-    64·HIST_SUBS state rows forever, the cheapest possible streaming
-    state. Run with update/complete output; counts merge by SUM with
-    any stored batch histogram (the X79 merge identity)."""
-    from ..functions.sketch import hist_buckets
-
-    b = hist_buckets(documents,
-                     F.length(F.coalesce(F.col(text_col), F.lit(""))))
-    return b.groupBy("octave", "sub", "bucket_lo").agg(
-        F.count(F.lit(1)).alias("n"))
-
-
-def streaming_source_checksums(documents: DataFrame,
-                               id_col: str = "url",
-                               text_col: str = "text",
-                               group_col: str = "lang") -> DataFrame:
-    """Streaming twin of ``sketch.source_checksums``: the per-group
-    content attestation maintained over arriving crawl drops — state is
-    one row per group forever (count/sum/xor are all streaming-legal
-    order-independent aggregates), so every micro-batch updates the
-    "same rows" certificate the batch side compares against. Run with
-    update/complete output."""
-    h = F.conv(F.substring(F.md5(F.concat(
-        F.col(id_col).cast("string"), F.lit(":"),
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))))), 1, 15),
-        16, 10).cast("long")
-    return (documents
-            .groupBy(F.col(group_col).alias(group_col))
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum(h.cast("decimal(38,0)")).cast("string")
-                 .alias("sum_h"),
-                 F.bit_xor(h).alias("xor_h")))
 
 
 def streaming_revisit_stats(captures: DataFrame, previous: DataFrame,

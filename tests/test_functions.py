@@ -56,22 +56,6 @@ def test_short_and_empty_docs_never_join(docs):
     assert 4 not in ids and 5 not in ids
 
 
-def test_minhash_index_roundtrip(spark, docs, tmp_path):
-    """The written band index reproduces exactly the inline candidate
-    pairs, and the parquet layout is band-partitioned (prunable)."""
-    import os
-
-    path = str(tmp_path / "lsh_index")
-    D.write_minhash_index(docs, path)
-    from_index = {(r["doc_a"], r["doc_b"]) for r in
-                  D.candidate_pairs_from_index(spark, path).collect()}
-    inline = {(r["doc_a"], r["doc_b"]) for r in
-              D.lsh_candidate_pairs(docs).collect()}
-    assert from_index == inline and from_index
-    assert sorted(d for d in os.listdir(path) if d.startswith("band=")) \
-        == ["band=0", "band=1", "band=2", "band=3"]
-
-
 def test_connected_components_chain_and_singleton(spark):
     """Chain 1-2-3 collapses to cluster 1 even though (1,3) is not a
     direct pair; 7-8 is its own cluster; isolated nodes don't appear."""
@@ -179,34 +163,12 @@ def vecs(spark):
     return df.withColumn("embedding", F.col("embedding").cast("array<float>"))
 
 
-def test_cosine_topk_order(vecs):
-    top = [r["vec_id"] for r in S.cosine_topk(vecs, [1.0, 0.0, 0.0, 0.0], k=3).collect()]
-    assert top == [0, 1, 3]
-
-
 def test_zero_vector_scores_zero(vecs):
-    rows = {r["vec_id"]: r["cos_sim"]
-            for r in S.cosine_topk(vecs, [1.0, 0.0, 0.0, 0.0], k=5).collect()}
+    """A zero vector's cosine denominator is 0: it scores 0.0, never NaN."""
+    rows = {r["vec_id"]: r["cos_sim"] for r in vecs.select(
+        "vec_id", S.cosine_vs_query(F.col("embedding"), [1.0, 0.0, 0.0, 0.0])
+        .alias("cos_sim")).collect()}
     assert rows[4] == 0.0 and rows[2] == -1.0
-
-
-def test_lsh_bucket_restricts_candidates(vecs):
-    top = [r["vec_id"] for r in S.lsh_topk(vecs, [1.0, 0.0, 0.0, 0.0],
-                                           k=5, n_bits=4).collect()]
-    assert 0 in top and 1 in top
-    assert 2 not in top                   # opposite sign bucket pruned
-
-
-def test_multiprobe_widens_candidates(vecs):
-    """probe_hamming=1 adds single-bit-flip neighbor buckets: the zero and
-    opposite vectors (buckets 0b0000 / query 0b1000, Hamming 1) appear."""
-    single = {r["vec_id"] for r in
-              S.lsh_topk(vecs, [1.0, 0.0, 0.0, 0.0], k=5, n_bits=4).collect()}
-    multi = {r["vec_id"] for r in
-             S.lsh_topk(vecs, [1.0, 0.0, 0.0, 0.0], k=5, n_bits=4,
-                        probe_hamming=1).collect()}
-    assert 2 not in single and 2 in multi
-    assert single <= multi
 
 
 def test_near_dup_pairs_cosine(vecs):
@@ -216,11 +178,13 @@ def test_near_dup_pairs_cosine(vecs):
 
 
 def test_short_query_vector_never_errors(vecs):
-    """ADVICE fix: a query vector shorter than n_bits must 0-pad, exactly
-    like sign_bucket's try_element_at on short data vectors."""
-    top = {r["vec_id"] for r in S.lsh_topk(vecs, [1.0, 1.0], k=5,
-                                           n_bits=4).collect()}
-    assert 0 not in top or top  # executes without IndexError; result sane
+    """ADVICE fix: a (query) vector shorter than n_bits 0-pads — the
+    missing dims read as 0-bits instead of raising an index error."""
+    short = vecs.sparkSession.createDataFrame(
+        [(9, [1.0, 1.0])], ["vec_id", "embedding"])
+    got = {r["vec_id"]: r["b"] for r in short.select(
+        "vec_id", S.sign_bucket(F.col("embedding"), 4).alias("b")).collect()}
+    assert got == {9: 0b1100}
 
 
 def test_random_planes_deterministic_and_consistent(vecs):

@@ -137,29 +137,6 @@ def test_tfidf_k_limits_rows(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_postings_index_roundtrip_and_pruning(spark, tmp_path):
-    from ocr_automation_system_spark.functions.index import (
-        lookup_postings, token_postings, write_postings_index,
-    )
-
-    rows = [(i, f"alpha beta w{i}", "s") for i in range(30)]
-    df = _docs(spark, rows)
-    path = str(tmp_path / "pidx")
-    write_postings_index(df, path, n_buckets=8)
-    # identical content to the direct computation
-    direct = {r["token"]: (r["df_docs"], r["postings"])
-              for r in token_postings(df).collect()}
-    from_idx = {r["token"]: (r["df_docs"], r["postings"])
-                for r in spark.read.parquet(path).collect()}
-    assert from_idx == direct
-    # point lookup returns the right row and prunes to one bucket
-    hit = lookup_postings(spark, path, "alpha", n_buckets=8)
-    got = hit.collect()
-    assert len(got) == 1 and got[0]["df_docs"] == 30
-    plan = hit._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(token), EqualTo(token,alpha)]" in plan
-
-
 def test_cms_one_sided_error_and_mergeability(spark):
     from pyspark.sql import functions as F
 
@@ -206,32 +183,11 @@ def test_skipgram_pairs_window_semantics(spark):
     assert got == dict(want)  # the 1-token doc contributes nothing
 
 
-def test_positional_index_phrase_parity_and_pruning(spark, tmp_path):
-    """Index-backed phrase search must equal the raw-text scan form and
-    must push the token equality into the pruned bucket read."""
-    from ocr_automation_system_spark.functions.index import (
-        phrase_hits, phrase_hits_from_index, write_positional_index,
-    )
-
-    rows = [(i, f"alpha beta gamma w{i} alpha beta", "s")
-            for i in range(20)] + [(99, "beta alpha only", "s")]
-    df = _docs(spark, rows)
-    path = str(tmp_path / "posidx")
-    write_positional_index(df, path, n_buckets=8)
-    want = sorted(map(tuple,
-                      phrase_hits(df, "alpha beta").collect()))
-    got_df = phrase_hits_from_index(spark, path, "alpha beta", n_buckets=8)
-    got = sorted(map(tuple, got_df.collect()))
-    assert got == want and len(got) == 20  # two hits per doc, doc 99 none
-    assert got[0][1] == 2  # n_hits
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "EqualTo(token,alpha)" in plan and "EqualTo(token,beta)" in plan
-
-
 def test_proximity_equal_terms_counts_unordered_pairs_once(spark):
     """term_a == term_b must not pair a position with itself (a doc with
     ONE occurrence is not a proximity hit), and each unordered position
-    pair counts exactly once — parity-pinned against the DuckDB twin."""
+    pair counts exactly once; distinct terms match in either order
+    within max_dist — parity-pinned against the DuckDB twin."""
     import duckdb
 
     from ocr_automation_system_spark.functions.index import proximity_hits
@@ -240,50 +196,24 @@ def test_proximity_equal_terms_counts_unordered_pairs_once(spark):
     rows = [(1, "x y x z x", "s"),     # x at 1,3,5 -> pairs (1,3)(3,5)(1,5)
             (2, "x alone here", "s"),  # single occurrence: NOT a hit
             (3, "no term at all", "s"),
-            (4, "x x", "s")]           # adjacent pair, dist 1
+            (4, "x x", "s"),           # adjacent pair, dist 1
+            (5, "alpha w w w beta tail", "s"),   # dist 4 -> hit
+            (6, "alpha w w w w w beta", "s"),    # dist 6 -> no hit
+            (7, "beta leads then alpha", "s")]   # either order, dist 3
     df = _docs(spark, rows)
     got = sorted(map(tuple,
                      proximity_hits(df, "x", "x", max_dist=5).collect()))
     assert got == [(1, 3, 2), (4, 1, 1)]
+    got_ab = sorted(map(tuple, proximity_hits(
+        df, "alpha", "beta", max_dist=5).collect()))
+    assert got_ab == [(5, 1, 4), (7, 1, 3)]
 
     con = duckdb.connect()
     con.register("documents", df.toPandas())
-    want = sorted(map(tuple, con.execute(
-        _sql_proximity_hits("x", "x", max_dist=5)).fetchall()))
-    assert got == want
-
-
-def test_positional_index_proximity_parity_and_pruning(spark, tmp_path):
-    """Index-backed NEAR/k must equal the raw-text scan form (distinct
-    and equal terms, including the no-self-pair rule) and push the token
-    equality into the pruned bucket read."""
-    from ocr_automation_system_spark.functions.index import (
-        proximity_hits, proximity_hits_from_index, write_positional_index,
-    )
-
-    rows = [(1, "alpha w w w beta tail", "s"),     # dist 4 -> hit
-            (2, "alpha w w w w w beta", "s"),      # dist 6 -> no hit
-            (3, "beta leads then alpha", "s"),     # either order, dist 3
-            (4, "alpha only here", "s"),           # one term -> no hit
-            (5, "x y x z x", "s"),                 # equal-term pairs
-            (6, "x alone", "s")]                   # single occ -> no hit
-    df = _docs(spark, rows)
-    path = str(tmp_path / "posidx")
-    write_positional_index(df, path, n_buckets=8)
-
-    for a, b in [("alpha", "beta"), ("x", "x")]:
-        want = sorted(map(tuple,
-                          proximity_hits(df, a, b, max_dist=5).collect()))
-        got_df = proximity_hits_from_index(spark, path, a, b, max_dist=5,
-                                           n_buckets=8)
-        got = sorted(map(tuple, got_df.collect()))
-        assert got == want, (a, b)
-        plan = got_df._jdf.queryExecution().executedPlan().toString()
-        assert f"EqualTo(token,{a})" in plan
-    assert sorted(r[0] for r in
-                  proximity_hits_from_index(spark, path, "alpha", "beta",
-                                            max_dist=5,
-                                            n_buckets=8).collect()) == [1, 3]
+    for (a, b), mine in ((("x", "x"), got), (("alpha", "beta"), got_ab)):
+        want = sorted(map(tuple, con.execute(
+            _sql_proximity_hits(a, b, max_dist=5)).fetchall()))
+        assert mine == want, (a, b)
 
 
 def test_anchor_bm25_incoming_field(spark):
@@ -311,15 +241,11 @@ def test_anchor_bm25_incoming_field(spark):
     assert all(r["n_terms_hit"] == 1 for r in out)
 
 
-def test_boolean_search_and_index_parity(spark, tmp_path):
+def test_boolean_search_and_not_semantics(spark):
     """AND/NOT semantics on planted docs (all must terms required, any
     must_not term disqualifies, occurrence totals count every must
-    occurrence); the index-backed form equals the scan form and pushes
-    the token equality into the pruned bucket read; the scan form's
-    plan is window-free and Python-free."""
-    from ocr_automation_system_spark.functions.index import (
-        boolean_from_index, boolean_search, write_positional_index,
-    )
+    occurrence); the plan is window-free and Python-free."""
+    from ocr_automation_system_spark.functions.index import boolean_search
 
     rows = [(1, "alpha beta alpha tail", "s"),   # both, no ban -> occ 3
             (2, "alpha beta gamma", "s"),        # banned by gamma
@@ -334,20 +260,9 @@ def test_boolean_search_and_index_parity(spark, tmp_path):
             ._jdf.queryExecution().executedPlan().toString())
     assert "Window" not in plan and "Python" not in plan
     assert "Exchange" not in plan  # row-local membership tests
-
-    path = str(tmp_path / "posidx")
-    write_positional_index(df, path, n_buckets=8)
-    got_idx_df = boolean_from_index(spark, path, ["alpha", "beta"],
-                                    ["gamma"], n_buckets=8)
-    assert sorted(map(tuple, got_idx_df.collect())) == got
-    iplan = got_idx_df._jdf.queryExecution().executedPlan().toString()
-    assert "EqualTo(token,alpha)" in iplan and \
-        "EqualTo(token,gamma)" in iplan
     # no must_not leg: pure AND
-    assert sorted(map(tuple, boolean_from_index(
-        spark, path, ["alpha", "beta"], n_buckets=8).collect())) == \
-        sorted(map(tuple, boolean_search(df, ["alpha", "beta"])
-                   .collect()))
+    assert sorted(map(tuple, boolean_search(
+        df, ["alpha", "beta"]).collect())) == [(1, 3), (2, 2), (4, 4)]
 
 
 def test_query_terms_normalized_through_document_tokenizer(spark):
@@ -388,12 +303,16 @@ def test_phrase_kwic_matches_phrase_hits_docset(spark):
             (4, "alphabeta merged is one token", "s"),
             (5, "alpha gamma beta not adjacent", "s"),
             (6, "beta alpha wrong order", "s"),
-            (7, "ALPHA BETA upper case", "s")]
+            (7, "ALPHA BETA upper case", "s"),
+            (8, "alpha beta gamma w alpha beta", "s")]
     df = _docs(spark, rows)
-    hit_docs = {r["doc_id"] for r in phrase_hits(df, "alpha beta").collect()}
+    hits = {r["doc_id"]: (r["n_hits"], r["first_pos"])
+            for r in phrase_hits(df, "alpha beta").collect()}
+    hit_docs = set(hits)
     kwic = {r["doc_id"]: r["snippet"]
             for r in phrase_kwic(df, "alpha beta", width=10).collect()}
-    assert set(kwic) == hit_docs == {1, 2, 3, 7}
+    assert set(kwic) == hit_docs == {1, 2, 3, 7, 8}
+    assert hits[8] == (2, 1) and hits[1] == (1, 2)
     assert "alpha beta" in kwic[1]
 
 
@@ -644,33 +563,6 @@ def test_source_checksums_merge_and_sensitivity(spark):
     assert tw["s"]["sum_h"] != full["s"]["sum_h"]
     assert tw["s"]["xor_h"] != full["s"]["xor_h"]
     assert tw["t"]["sum_h"] == full["t"]["sum_h"]   # untouched source
-
-
-def test_bm25_from_index_parity_with_scan(spark, tmp_path):
-    """Index-backed BM25 (stored positional index + dl artifact) must
-    rank IDENTICALLY to the scan-based bm25_search — same shared
-    expression tail, pinned here including weighted terms."""
-    from ocr_automation_system_spark.functions.index import (
-        bm25_from_index,
-        bm25_search,
-        write_doclen_table,
-        write_positional_index,
-    )
-
-    rows = [(i, f"alpha beta {'gamma ' * (i % 4)}delta tok{i % 7}", "s")
-            for i in range(60)]
-    df = _docs(spark, rows)
-    ipath = str(tmp_path / "posidx")
-    dpath = str(tmp_path / "dl")
-    write_positional_index(df, ipath, n_buckets=8)
-    write_doclen_table(df, dpath)
-
-    for w in (None, {"gamma": 2.5, "alpha": 0.5}):
-        want = bm25_search(df, ["alpha", "gamma"], k=15,
-                           weights=w).collect()
-        got = bm25_from_index(spark, ipath, dpath, ["alpha", "gamma"],
-                              k=15, weights=w, n_buckets=8).collect()
-        assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
 def test_token_df_delta_statuses(spark):

@@ -645,6 +645,34 @@ def test_cdc_dup_pairs_find_shifted_near_copy(spark):
     assert all(3 not in p for p in pairs)
 
 
+def test_cdc_dup_pairs_repeated_id_counts_once(spark):
+    """An input that repeats a document row (a snapshot union, a
+    fanned-out join) must give the same pairs and counts as the
+    de-duplicated input: the repeated id's chunks count once, not
+    twice."""
+    from ocr_automation_system_spark.functions.curation import (
+        cdc_dup_pairs,
+    )
+
+    base = ("section alpha discusses the crawler architecture in some "
+            "depth. section beta covers the parser and its fallbacks. "
+            "section gamma walks through dedup. section delta closes "
+            "with sampling, sketches and the shipping checklist.")
+    mid = len(base) // 2
+    edited = base[:mid] + " [SPONSORED CONTENT INSERTED HERE] " + base[mid:]
+    rows = [(1, base), (2, edited)]
+    once = spark.createDataFrame(rows, ["doc_id", "text"])
+    twice = spark.createDataFrame(rows + [(1, base)], ["doc_id", "text"])
+
+    def pairs(df):
+        return sorted(tuple(r) for r in
+                      cdc_dup_pairs(df, min_shared=1).collect())
+
+    want = pairs(once)
+    assert want and want[0][:2] == (1, 2)
+    assert pairs(twice) == want
+
+
 def test_cdc_dup_pairs_occupancy_cap_censors_boilerplate(spark):
     """A chunk shared by more docs than the cap is template boilerplate
     and must generate NO pairs (delete the cap and this goes red)."""

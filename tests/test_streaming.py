@@ -511,9 +511,10 @@ def test_streaming_content_drift_matches_batch(spark, tmp_path):
 
 
 def test_streaming_doclen_histogram_matches_batch(spark, tmp_path):
-    """The length histogram (X79) is streaming-maintainable: two crawl
-    drops aggregated in complete mode equal the batch artifact over the
-    union — bounded state (<= 64*HIST_SUBS rows) whatever the corpus."""
+    """The batch length histogram (X79) runs unchanged on a stream: two
+    crawl drops aggregated in complete mode equal the batch artifact over
+    the union — bounded state (<= 64*HIST_SUBS rows) whatever the
+    corpus."""
     import pandas as pd
 
     from ocr_automation_system_spark.functions.sketch import (
@@ -522,7 +523,6 @@ def test_streaming_doclen_histogram_matches_batch(spark, tmp_path):
     from ocr_automation_system_spark.streaming.stream import (
         DOCUMENTS_SCHEMA,
         stream_documents,
-        streaming_doclen_histogram,
     )
 
     d = str(tmp_path / "drops")
@@ -540,7 +540,7 @@ def test_streaming_doclen_histogram_matches_batch(spark, tmp_path):
         df["warc_ts"] = df["warc_ts"].astype("datetime64[us]")
         df.to_parquet(os.path.join(d, f"drop{i}.parquet"))
 
-    hist = streaming_doclen_histogram(
+    hist = doclen_histogram(
         stream_documents(spark, d, max_files_per_trigger=1))
     q = (hist.writeStream.format("memory").queryName("hist_stream")
          .outputMode("complete").trigger(availableNow=True).start())
@@ -556,9 +556,9 @@ def test_streaming_doclen_histogram_matches_batch(spark, tmp_path):
 
 
 def test_streaming_checksums_match_batch(spark, tmp_path):
-    """X100: the attestation triple maintained over two drops in
-    complete mode equals the batch checksums over the union — one
-    state row per group forever."""
+    """X100: the batch attestation operator runs unchanged on a stream —
+    the triple maintained over two drops in complete mode equals the
+    batch checksums over the union, one state row per group forever."""
     import os
 
     import pandas as pd
@@ -569,7 +569,6 @@ def test_streaming_checksums_match_batch(spark, tmp_path):
     from ocr_automation_system_spark.streaming.stream import (
         DOCUMENTS_SCHEMA,
         stream_documents,
-        streaming_source_checksums,
     )
 
     d = str(tmp_path / "drops")
@@ -584,8 +583,9 @@ def test_streaming_checksums_match_batch(spark, tmp_path):
         df["warc_ts"] = df["warc_ts"].astype("datetime64[us]")
         df.to_parquet(os.path.join(d, f"drop{i}.parquet"))
 
-    q = (streaming_source_checksums(
-            stream_documents(spark, d, max_files_per_trigger=1))
+    q = (source_checksums(
+            stream_documents(spark, d, max_files_per_trigger=1),
+            id_col="url", group_col="lang")
          .writeStream.format("memory").queryName("cksum_stream")
          .outputMode("complete").trigger(availableNow=True).start())
     q.awaitTermination(120)
