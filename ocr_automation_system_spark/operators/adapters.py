@@ -1,4 +1,4 @@
-"""Canonicalization adapters + entity join (A1-A8 in SURVEY.md §2.5).
+"""Canonicalization adapters + entity build (A1-A8 in SURVEY.md §2.5).
 
 The reference adapters (`/root/reference/project/verification_engine/
 adapters/*`) are per-document dict projections; here each is a JVM-side
@@ -6,15 +6,16 @@ projection over the extraction results — whole-stage codegen, no Python.
 The projections are Spark SQL text (``sqltext``): each reaches the JVM in
 one ``selectExpr`` call, where the former ``Column`` trees cost a py4j
 round trip per ``F.*`` call — ~5k of them and ~1.2-1.4 s of driver time
-for ``build_entities`` on a 4-vCPU VM, now ~130 and ~0.2-0.3 s. These columns are join keys and
-comparison values, not golden text, so [B] expressions are allowed
+for ``build_entities`` on a 4-vCPU VM, now ~50 and ~0.1-0.2 s. These
+columns are join keys and comparison values, not golden text, so [B] expressions are allowed
 (SURVEY.md §7 byte-identity rule: golden-affecting transforms stay in
 Python UDFs; keys/metrics go JVM).
 
-The entity builder (A8, `engine.py:47-71`) becomes a real 3-way full-outer
-join on the normalized PAN key — the reference holds exactly one entity in
-memory, so its "join" is implicit; at 10^12 rows this is shuffle boundary #1
-(AQE-tuned, skew-salted — see ``salted_entity_join``).
+The entity builder (A8, `engine.py:47-71`) groups the three doctypes by the
+normalized PAN key — the reference holds exactly one entity in memory, so
+its "join" is implicit. Here it is one scan of the extractions and one
+keyed aggregation (one hash exchange on a near-unique key), the work of a
+3-way full-outer join without a per-side read, window or join.
 """
 
 from __future__ import annotations
@@ -168,42 +169,48 @@ def constitution_sql(x: str) -> str:
 
 # -- A5-A7: per-doctype normalized projections --------------------------------
 #
-# Each adapter is (doctype, parsed json columns, [(output column, sql)]);
-# the json columns are parsed once in a first projection, the output
-# columns read them in a second.
+# Each adapter is (doctype, parsed json columns, columns), where
+# ``columns(*aliases)`` renders [(output column, sql)] against the names the
+# parsed json columns are bound to, in order: the json columns are parsed
+# once in a first projection, the output columns read them in a second. The
+# first output column is the doc's url.
 
-_PAN = ("PAN", {"f": ("fields_json", PAN_FIELDS_SCHEMA)}, [
+_PAN = ("PAN", {"f": ("fields_json", PAN_FIELDS_SCHEMA)}, lambda f: [
     ("pan_url", "url"),
-    ("pan", pan_sql(nz("f.pan"))),
-    ("legal_name", name_sql(nz("f.name"))),
-    ("pan_type", nz("f.pan_type")),
-    ("incorporation_date", date_sql(nz("f.incorporation_date"))),
-    ("raw_name", nz("f.name")),
+    ("pan", pan_sql(nz(f"{f}.pan"))),
+    ("legal_name", name_sql(nz(f"{f}.name"))),
+    ("pan_type", nz(f"{f}.pan_type")),
+    ("incorporation_date", date_sql(nz(f"{f}.incorporation_date"))),
+    ("raw_name", nz(f"{f}.name")),
 ])
 
-_GST = ("GST_CERTIFICATE", {"f": ("fields_json", GST_FIELDS_SCHEMA)}, [
+_GST = ("GST_CERTIFICATE", {"f": ("fields_json", GST_FIELDS_SCHEMA)}, lambda f: [
     ("gst_url", "url"),
-    ("legal_name", name_sql(nz("f.name"))),
-    ("gst_number", nz("f.gst_number")),
-    ("pan", f"upper(substring({nz('f.gst_number')}, 3, 10))"),
-    ("constitution", constitution_sql(nz("f.constitution_of_business"))),
-    ("raw_constitution", nz("f.constitution_of_business")),
-    ("principal_address", address_sql("f.principal_address", (
+    ("legal_name", name_sql(nz(f"{f}.name"))),
+    ("gst_number", nz(f"{f}.gst_number")),
+    ("pan", f"upper(substring({nz(f'{f}.gst_number')}, 3, 10))"),
+    ("constitution", constitution_sql(nz(f"{f}.constitution_of_business"))),
+    ("raw_constitution", nz(f"{f}.constitution_of_business")),
+    ("principal_address", address_sql(f"{f}.principal_address", (
         "building_flat_no", "premises_name", "road_street", "locality",
         "city", "district", "state", "pin_code"))),
-    ("additional_places", nz("f.additional_place_of_business")),
+    ("additional_places", nz(f"{f}.additional_place_of_business")),
     ("total_additional_places",
-     "coalesce(nullif(f.total_no_of_additional_places, ''), '0')"),
-    ("raw_name", nz("f.name")),
+     f"coalesce(nullif({f}.total_no_of_additional_places, ''), '0')"),
+    ("raw_name", nz(f"{f}.name")),
 ])
 
-# O1 — `_get_current_enterprise_type` (`udyam_adapter.py:85-99`): latest
-# classification_year wins. try_element_at: a doc whose classification
-# table didn't survive extraction (e.g. OCR-leg line drops) has an EMPTY
-# array — plain element_at would throw task-killing INVALID_ARRAY_INDEX,
-# violating the poison-row contract.
-_ENTERPRISE_TYPE = ("try_element_at(reverse(array_sort(t.classification_history)), 1)"
-                    ".enterprise_type")
+
+def _enterprise_type(t: str) -> str:
+    """O1 — `_get_current_enterprise_type` (`udyam_adapter.py:85-99`):
+    latest classification_year wins. try_element_at: a doc whose
+    classification table didn't survive extraction (e.g. OCR-leg line
+    drops) has an EMPTY array — plain element_at would throw task-killing
+    INVALID_ARRAY_INDEX, violating the poison-row contract."""
+    return (f"try_element_at(reverse(array_sort({t}.classification_history)), 1)"
+            ".enterprise_type")
+
+
 _FACTORY = ("named_struct("
             "'unit_name', regexp_replace(trim(u.unit_name), " + sql_str(r"\s+") + ", ' '), "
             f"'pin', upper(trim({nz('u.pin')})), "
@@ -213,22 +220,25 @@ _FACTORY = ("named_struct("
                     "state", "pin")]) + ")")
 
 _UDYAM = ("UDYAM", {"f": ("fields_json", UDYAM_FIELDS_SCHEMA),
-                    "t": ("tables_json", UDYAM_TABLES_SCHEMA)}, [
+                    "t": ("tables_json", UDYAM_TABLES_SCHEMA)}, lambda f, t: [
     ("udyam_url", "url"),
-    ("legal_name", name_sql(nz("f.enterprise_name"))),
-    ("pan", pan_sql(nz("f.pan"))),
-    ("udyam_number", nz("f.udyam_number")),
-    ("incorporation_date", date_sql(nz("f.incorporation_date"))),
-    ("commencement_date", date_sql(nz("f.commencement_date"))),
-    ("registered_address", address_sql("f.official_address", (
+    ("legal_name", name_sql(nz(f"{f}.enterprise_name"))),
+    ("pan", pan_sql(nz(f"{f}.pan"))),
+    ("udyam_number", nz(f"{f}.udyam_number")),
+    ("incorporation_date", date_sql(nz(f"{f}.incorporation_date"))),
+    ("commencement_date", date_sql(nz(f"{f}.commencement_date"))),
+    ("registered_address", address_sql(f"{f}.official_address", (
         "flat_no", "building", "road", "village_town", "city", "district",
         "state", "pin"))),
-    ("factory_addresses", f"coalesce(transform(t.units_details, u -> {_FACTORY}), array())"),
-    ("enterprise_type", nz(_ENTERPRISE_TYPE)),
-    ("mobile", nz("f.mobile")),
-    ("email", nz("f.email")),
-    ("raw_name", nz("f.enterprise_name")),
+    ("factory_addresses",
+     f"coalesce(transform({t}.units_details, u -> {_FACTORY}), array())"),
+    ("enterprise_type", nz(_enterprise_type(t))),
+    ("mobile", nz(f"{f}.mobile")),
+    ("email", nz(f"{f}.email")),
+    ("raw_name", nz(f"{f}.enterprise_name")),
 ])
+
+_SIDES = (("pan", _PAN), ("gst", _GST), ("udyam", _UDYAM))
 
 
 def _adapt(results: DataFrame, spec: tuple) -> DataFrame:
@@ -237,7 +247,7 @@ def _adapt(results: DataFrame, spec: tuple) -> DataFrame:
         results.where(f"document_type = {sql_str(doctype)}")
         .selectExpr("url", *[f"from_json({src}, {sql_str(schema.json())}) AS {name}"
                              for name, (src, schema) in parsed.items()])
-        .selectExpr(*[f"{sql} AS {name}" for name, sql in columns])
+        .selectExpr(*[f"{sql} AS {name}" for name, sql in columns(*parsed)])
     )
 
 
@@ -258,41 +268,49 @@ def adapt_udyam(results: DataFrame) -> DataFrame:
     return _adapt(results, _UDYAM)
 
 
-# -- A8: entity join -----------------------------------------------------------
-
-def _entity_side(results: DataFrame, spec: tuple, doc: str) -> DataFrame:
-    """(entity_key, <doc> struct) with one doc per PAN: the first by url —
-    deterministic, and the relational form of the reference's
-    single-entity assumption (top-1-per-group, SURVEY.md §2.7)."""
-    columns = [name for name, _ in spec[2]]
-    url_col = columns[0]
-    return (
-        _adapt(results, spec).where("pan != ''")
-        .selectExpr("*", f"row_number() OVER (PARTITION BY pan ORDER BY {url_col}) AS _rn")
-        .where("_rn = 1")
-        .selectExpr("pan AS entity_key", f"struct({', '.join(columns)}) AS {doc}")
-    )
-
+# -- A8: entity build ----------------------------------------------------------
 
 def build_entities(results: DataFrame) -> DataFrame:
-    """A8 (`engine.py:47-71`): full-outer 3-way join of the normalized
-    per-doctype frames on the PAN entity key; absent docs become NULL
-    structs (the reference's ``{}``).
+    """A8 (`engine.py:47-71`): one row per PAN entity key with the
+    normalized PAN, GST and Udyam doc structs; an absent doc is a NULL
+    struct (the reference's ``{}``).
 
-    Scale note: the join keys are near-unique (one entity per PAN), so the
-    shuffle is uniform; AQE handles residual skew. Each side is deduped to
-    one doc per key first, bounding the join output to |keys|."""
+    One scan and one aggregation. A projection over the three doctypes
+    parses each doctype's json under its own ``document_type`` condition,
+    keys the row by that doctype's ``pan`` and builds its doc struct, NULL
+    on the other doctypes' rows. ``min`` per doc column then keeps one doc
+    per (doctype, key): the first by url, the struct's first field, with
+    the rest of the struct breaking url ties, so it is deterministic — the
+    relational form of the reference's single-entity assumption
+    (top-1-per-group, SURVEY.md §2.7). Keys are near-unique PANs, so the
+    one hash exchange is uniform and map-side partial aggregation has
+    little to merge."""
+    parsed, keys, docs = [], [], []
+    for side, (doctype, json_cols, columns) in _SIDES:
+        is_side = f"document_type = {sql_str(doctype)}"
+        aliases = [f"{side}_{name}" for name in json_cols]
+        parsed += [f"IF({is_side}, from_json({src}, {sql_str(schema.json())}), NULL) AS {alias}"
+                   for alias, (src, schema) in zip(aliases, json_cols.values())]
+        sql = dict(columns(*aliases))
+        keys.append((is_side, sql["pan"]))
+        fields = ", ".join(f"{sql_str(name)}, {expr}" for name, expr in sql.items())
+        docs.append(f"IF({is_side}, named_struct({fields}), NULL) AS {side}_doc")
+    doctypes = ", ".join(sql_str(spec[0]) for _, spec in _SIDES)
     return (
-        _entity_side(results, _PAN, "pan_doc")
-        .join(_entity_side(results, _GST, "gst_doc"), "entity_key", "full_outer")
-        .join(_entity_side(results, _UDYAM, "udyam_doc"), "entity_key", "full_outer")
+        results.where(f"document_type IN ({doctypes})")
+        .selectExpr("url", "document_type", *parsed)
+        .selectExpr(f"{case(keys, 'NULL')} AS entity_key", *docs)
+        .where("entity_key != ''")
+        .groupBy("entity_key")
+        .agg(*[F.expr(f"min({side}_doc) AS {side}_doc") for side, _ in _SIDES])
     )
 
 
 def duplicate_id_check(results: DataFrame) -> DataFrame:
     """The north rule's duplicate-id consistency check: PANs claimed by
-    conflicting normalized names. A pure groupBy (map-side partial agg);
-    this is shuffle boundary #2 and is skew-safe because PAN cardinality is
+    conflicting normalized names. One groupBy (map-side partial agg);
+    ``n_names`` is the size of the distinct-name set it collects, so no
+    second distinct aggregate. Skew-safe because PAN cardinality is
     ~|entities|."""
     named = "CASE WHEN name != '' THEN name END"
     return (
@@ -300,9 +318,9 @@ def duplicate_id_check(results: DataFrame) -> DataFrame:
         .selectExpr("entity_pan AS pan", f"{name_sql('entity_name')} AS name")
         .groupBy("pan")
         .agg(F.expr("count(1) AS n_docs"),
-             F.expr(f"count(DISTINCT {named}) AS n_names"),
              F.expr(f"sort_array(collect_set({named})) AS names"))
-        .selectExpr("*", "n_names > 1 AS is_conflict")
+        .selectExpr("pan", "n_docs", "CAST(size(names) AS BIGINT) AS n_names",
+                    "names", "size(names) > 1 AS is_conflict")
     )
 
 

@@ -34,15 +34,20 @@ split-starved local input like this one-file corpus and is absent at
 production split counts; extraction throughput scales linearly with
 executors, which is what the N->4N efficiency criterion measures.""",
     "entity_join": """Input is the COMMITTED extraction table (plans/resume.py writes it
-once; each adapter branch re-reads with its doctype filter + pruned columns
-pushed to the scan). Shuffle inventory: one hash exchange per doctype side
-for the dedup-window (partitionBy pan), reused by the full-outer sort-merge
-joins (same key) — no re-exchange between window and join. Full-outer
-cannot broadcast by definition; keys are near-unique PANs so the shuffle is
-uniform; AQE coalesces post-shuffle partitions at small scale and splits
-skew at large scale. The rules stage adds NO exchange: three projections
-over the joined row (shared bindings, one struct column per rule CASE, then
-inline of the rule rows), which whole-stage codegen fuses into one stage.""",
+once), read ONCE: the doctype filter and the pruned columns are pushed to
+the one scan. A projection parses each doctype's json under its own
+document_type condition, keys the row by that doctype's PAN and builds its
+doc struct. The empty-key filter is pushed below it with its own
+from_json pruned to the key field, so each doc's fields_json is parsed
+twice: once for the key, once in full. One aggregation keyed on
+entity_key then keeps the min-url doc per doctype: partial aggregate, ONE
+hash exchange, final aggregate. It is a sort aggregate because a struct
+min buffer is not fixed-width; keys are near-unique PANs, so the shuffle
+is uniform and the partial aggregate has little to merge. No window, no join. The rules stage
+adds NO exchange: three projections over the entity row (shared bindings,
+one struct column per rule CASE, then inline of the rule rows), which
+whole-stage codegen fuses into one stage, and entity_report's groupBy on
+entity_key reuses the aggregation's hash partitioning.""",
     "lsh_pairs": """The LSH band join shuffles on (band, sig) — the signature, never the
 document text. Signature computation is explode -> md5 -> 8 MIN
 aggregates in ONE whole-stage-codegen hash aggregate: map-side partial
@@ -106,10 +111,9 @@ def main() -> None:
     corpus = corpus_for(spark, SF)
     results = extract_documents(corpus)
 
-    # The validation stage consumes the COMMITTED extraction table (three
-    # adapter branches re-read it) — mirror plans/resume.py, which writes
-    # extraction once and reads it back, instead of inlining the UDF pass
-    # into every branch.
+    # The validation stage consumes the COMMITTED extraction table — mirror
+    # plans/resume.py, which writes extraction once and reads it back,
+    # instead of inlining the UDF pass into the validation plan.
     import tempfile
     ext_path = os.path.join(tempfile.mkdtemp(), "extractions")
     results.write.mode("overwrite").parquet(ext_path)

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -32,3 +33,19 @@ def corpus_path(tmp_path_factory):
     path = str(tmp_path_factory.mktemp("corpus") / "documents.parquet")
     write_corpus(path, n_rows=300, seed=42)
     return path
+
+
+@pytest.fixture(scope="session")
+def jobs_of(spark):
+    """``jobs_of(run)``: the Spark jobs launched by ``run()``, counted
+    under a job group."""
+    def count(run):
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

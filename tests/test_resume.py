@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import pytest
 
@@ -98,22 +97,10 @@ def _manifest(out, b):
     return os.path.join(out, "_manifest", f"bucket_{b:05d}.json")
 
 
-def _jobs_of(spark, run):
-    """Spark jobs launched by ``run()``, counted under a job group."""
-    sc = spark.sparkContext
-    group = f"resume-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_wave_job_count_does_not_grow_with_buckets(spark, docs, tmp_path):
+def test_wave_job_count_does_not_grow_with_buckets(spark, docs, tmp_path, jobs_of):
     """A wave is one scan, one extraction and one partitioned write with
     observed manifest counters, whatever the bucket count."""
-    jobs = {n: _jobs_of(spark, lambda n=n: run_resumable_extraction(
+    jobs = {n: jobs_of(lambda n=n: run_resumable_extraction(
                 spark, docs, str(tmp_path / f"b{n}"), n_buckets=n))
             for n in (2, 8)}
     assert jobs[2] == jobs[8] <= 4, jobs
