@@ -143,7 +143,7 @@ def benchmark_contamination(df: DataFrame, id_col: str = "doc_id",
         F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("long"),
         F.lit(2147483647))
     sh = ensure_parallelism(df).select(F.col(id_col).alias("doc_id"),
-                   F.explode(shingles(F.col(text_col), n)).alias("s"))
+                   F.explode(shingles(text_col, n)).alias("s"))
     sh = sh.select("doc_id", key.alias("k"))
     is_bench = F.pmod(F.col("doc_id"), F.lit(benchmark_mod)) == 0
     bench = (sh.filter(is_bench)

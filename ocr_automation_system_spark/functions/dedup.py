@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import (
-    MINHASH_P, clean_text, content_hash, shingle_hashes, shingles,
-    ws_tokens,
+    MINHASH_A, MINHASH_C, MINHASH_P, clean_text, content_hash,
+    shingle_hash_sql, shingle_hashes, shingles, shingles_sql, ws_tokens,
 )
 from .util import drop_overcap_keys, ensure_parallelism
 
@@ -98,9 +98,9 @@ def minhash_bands(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     shingle) is materialized in its own Project, so the n_hashes min-hash
     expressions referencing it don't each re-run tokenize->shingle->md5
     (CollapseProject refuses to inline a non-cheap expression referenced
-    more than once)."""
+    more than once). Each step reaches the JVM as Spark SQL text, one
+    call per projection (the ``operators/sqltext`` convention)."""
     n_hashes = bands * rows_per_band
-    from .text import MINHASH_A, MINHASH_C
     assert n_hashes <= len(MINHASH_A), (
         f"bands*rows_per_band={n_hashes} exceeds the {len(MINHASH_A)} "
         f"universal-hash parameter pairs in text.MINHASH_A/MINHASH_C")
@@ -113,32 +113,27 @@ def minhash_bands(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # per-shingle F.transform lambdas — higher-order functions are
     # CodegenFallback (interpreted per element) and carried a large
     # one-time codegen-compile cost on top.
-    sh = df.select(F.col(id_col).alias("doc_id"),
-                   F.explode(shingles(F.col(text_col), n)).alias("s"))
-    hp = sh.select(
-        "doc_id",
-        F.pmod(F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("long"),
-               F.lit(MINHASH_P)).alias("hp"),
-    )
+    sh = df.selectExpr(f"{id_col} AS doc_id",
+                       f"explode({shingles_sql(text_col, n)}) AS s")
+    hp = sh.selectExpr("doc_id",
+                       f"pmod({shingle_hash_sql('s')}, {MINHASH_P}) AS hp")
     sigs = hp.groupBy("doc_id").agg(*[
-        F.min(F.pmod(F.lit(MINHASH_A[i]) * F.col("hp") + F.lit(MINHASH_C[i]),
-                     F.lit(MINHASH_P))).alias(f"m{i}")
+        F.expr(f"min(pmod({MINHASH_A[i]} * hp + {MINHASH_C[i]}, "
+               f"{MINHASH_P})) AS m{i}")
         for i in range(n_hashes)
     ])
-    band_strs = [
-        F.concat_ws("|", *[
-            F.col(f"m{b * rows_per_band + r}").cast("string")
-            for r in range(rows_per_band)
-        ])
-        for b in range(bands)
-    ]
+    band_strs = ", ".join(
+        "concat_ws('|', " + ", ".join(
+            f"CAST(m{b * rows_per_band + r} AS STRING)"
+            for r in range(rows_per_band)) + ")"
+        for b in range(bands))
     # Shingle-less docs never reach the aggregate (explode of an empty
     # array yields no rows) — exactly the rows the sentinel filter used
     # to drop, so the band table is unchanged; the filter stays as a
     # belt-and-braces guard for callers feeding pre-built signatures.
     return (
-        sigs.select("doc_id", F.posexplode(F.array(*band_strs)).alias("band", "sig"))
-        .filter(F.col("sig") != _empty_band_sig(rows_per_band))
+        sigs.selectExpr("doc_id", f"posexplode(array({band_strs})) AS (band, sig)")
+        .filter(f"sig != '{_empty_band_sig(rows_per_band)}'")
     )
 
 
@@ -154,10 +149,10 @@ def minhash_bands_stateless(df: DataFrame, id_col: str = "doc_id",
     batches. The HOF min is interpreted (CodegenFallback), so the
     aggregate form stays the batch default. Parity with ``minhash_bands``
     is pinned by test."""
-    from .text import MINHASH_A, MINHASH_C, bind_array
+    from .text import bind_array
 
     n_hashes = bands * rows_per_band
-    sh = shingles(F.col(text_col), n)
+    sh = shingles(text_col, n)
 
     def _perm(i: int):
         # NOTE: a 2-arg transform lambda would receive (element, index) —
@@ -179,7 +174,7 @@ def minhash_bands_stateless(df: DataFrame, id_col: str = "doc_id",
             F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
             F.lit(MINHASH_P)))
     return (df
-            .filter(F.size(shingles(F.col(text_col), n)) > 0)
+            .filter(F.size(sh) > 0)
             .select(F.col(id_col).alias("doc_id"),
                     F.posexplode(bind_array(hp, _bands))
                     .alias("band", "sig")))
@@ -204,11 +199,10 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
         # (``write_dedup_index``) — this is the in-session equivalent
         # (tiny: ~bands rows per doc).
         bt = bt.persist()
-    a, b = bt.alias("a"), bt.alias("b")
     return (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        bt.alias("a").join(bt.alias("b"), ["band", "sig"])
+        .filter("a.doc_id < b.doc_id")
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
         .distinct()
     )
 
@@ -244,7 +238,7 @@ def minhash_recall_sample(df: DataFrame, id_col: str = "doc_id",
     samp = (df.crossJoin(F.broadcast(nrow))
             .filter(h32 < thr).drop("_n"))
     sh = (samp.select(F.col(id_col).alias("doc_id"),
-                      shingles(F.col(text_col), n).alias("sh"))
+                      shingles(text_col, n).alias("sh"))
           .filter(F.size("sh") > 0))
     a, b = sh.alias("a"), sh.alias("b")
     true_pairs = (
@@ -277,7 +271,7 @@ def write_dedup_index(df: DataFrame, path: str, id_col: str = "doc_id",
      .parquet(os.path.join(path, "bands")))
     (ensure_parallelism(df)
      .select(F.col(id_col).alias("doc_id"),
-             shingles(F.col(text_col), n).alias("sh"))
+             shingles(text_col, n).alias("sh"))
      .write.mode("overwrite").parquet(os.path.join(path, "shingles")))
 
 
@@ -315,7 +309,7 @@ def incremental_dedup(new_df: DataFrame, spark, path: str,
             .distinct())
     new_sh = (ensure_parallelism(new_df)
               .select(F.col(id_col).alias("new_id"),
-                      shingles(F.col(text_col), n).alias("sh_n")))
+                      shingles(text_col, n).alias("sh_n")))
     ver = (cand
            .join(new_sh, "new_id")
            .join(corpus_sh.select(F.col("doc_id").alias("corpus_id"),
@@ -344,24 +338,22 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     Join the (small) candidate-pair set back to the shingle table twice —
     both joins are on doc ids (uniform), the Jaccard itself is an array
     intersection per row. Returns (doc_a, doc_b, jaccard)."""
-    sh = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc_id"), shingles(F.col(text_col), n).alias("sh"))
+    sh = ensure_parallelism(df).selectExpr(
+        f"{id_col} AS doc_id", f"{shingles_sql(text_col, n)} AS sh")
     if cache_index:
         sh = sh.persist()  # joined twice (doc_a and doc_b sides)
     pairs = lsh_candidate_pairs(df, id_col, text_col, n, bands, rows_per_band,
                                 cache_index)
     j = (
         pairs
-        .join(sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            (F.size(F.array_intersect("sh_a", "sh_b"))
-             / F.size(F.array_union("sh_a", "sh_b"))).alias("jaccard"),
-        )
+        .join(sh.selectExpr("doc_id AS doc_a", "sh AS sh_a"), "doc_a")
+        .join(sh.selectExpr("doc_id AS doc_b", "sh AS sh_b"), "doc_b")
+        .selectExpr("doc_a", "doc_b",
+                    "size(array_intersect(sh_a, sh_b)) "
+                    "/ size(array_union(sh_a, sh_b)) AS jaccard")
     )
     if threshold > 0.0:
-        j = j.filter(F.col("jaccard") >= threshold)
+        j = j.filter(f"jaccard >= {float(threshold)!r}D")
     return j
 
 
@@ -478,8 +470,7 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
     division — bit-identical in any engine/partitioning."""
     sh = (ensure_parallelism(df)
           .select(F.col(id_col).alias("_doc"),
-                  F.explode(shingle_hashes(
-                      shingles(F.col(text_col), n))).alias("_h")))
+                  F.explode(shingle_hashes(text_col, n)).alias("_h")))
     # read 3x (sizes + both self-join sides); survivors are the
     # non-boilerplate shingle stream — at cluster scale write them
     # bucketed by hash instead (the duplicate_spans convention)
@@ -515,11 +506,16 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
 
     Hybrid execution, same spirit as Spark's broadcast-join threshold:
 
-    * edge set <= ``collect_threshold``: collect to the driver and run
-      union-find (the dup GRAPH after LSH+Jaccard filtering is orders of
-      magnitude smaller than the corpus — collecting pairs is not
-      collecting data; at toy scale this replaces ~5s of per-round job
-      latency with milliseconds).
+    * at most ``collect_threshold`` undirected pair rows (as given,
+      duplicates included): one ``limit(collect_threshold + 1)`` Arrow
+      collect fetches them and union-find runs on the driver (the dup GRAPH
+      after LSH+Jaccard filtering is orders of magnitude smaller than
+      the corpus — collecting pairs is not collecting data; at toy scale
+      this replaces ~5s of per-round job latency with milliseconds). No
+      other Spark job runs: no symmetrized edge table, no persist, no
+      count or fingerprint, and the (node, cluster_id) labels come back
+      as a local relation built from an Arrow table, so a query that
+      reads them needs no Python worker.
     * larger: min-label propagation WITH pointer doubling — every node
       starts labeled with itself; each round a node takes the min of its
       own label, its neighbors' labels, and its label's label (the
@@ -549,47 +545,44 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     test_cc_resumes_from_committed_rounds``). Batch callers pass the
     job's checkpoint/output dir, exactly as ``--curate`` does.
 
-    The checkpoint subdir is keyed by a FINGERPRINT of the edge set
-    (count + order-independent xor of xxhash64(src,dst), computed in
-    the same pass as the threshold count): a resumed job whose input
+    The distributed path alone builds the symmetric edge table, and its
+    checkpoint subdir is keyed by a FINGERPRINT of that table (count +
+    order-independent xor of xxhash64(src,dst), one aggregate over the
+    persisted edges): a resumed job whose input
     grew (the supported interrupt/resume workflow — extraction resumes
     with more buckets, then --curate re-runs into the same output dir)
     gets a fresh subdir instead of silently replaying the stale edge
     set's rounds; a byte-identical re-run still resumes. Stale
     fingerprints' subdirs are pruned on entry."""
-    sym = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    edges = sym.unionByName(
-        sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
+    # One action: up to collect_threshold + 1 undirected pairs. If they
+    # all fit, union-find runs on them as they are — union is symmetric,
+    # so no symmetrized, distinct or persisted edge table is needed.
+    # toArrow runs the limit as one job over every partition (a local
+    # limit per task, then one single-partition read); collect() would
+    # scan the partitions in growing waves of jobs (1, 4, 16, ...), one
+    # more wave whenever the pairs do not fill the limit.
+    small = pairs.select(a_col, b_col).limit(collect_threshold + 1).toArrow()
+    if small.num_rows <= collect_threshold:
+        parent: dict = {}
 
-    stats = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("src", "dst")).alias("fp")).collect()[0]
-    n_edges = stats["n"]
-    if n_edges <= collect_threshold:
-        try:
-            parent: dict = {}
+        def find(x):
+            r = x
+            while parent[r] != r:
+                r = parent[r]
+            while parent[x] != r:  # path compression
+                parent[x], x = r, parent[x]
+            return r
 
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for row in edges.collect():
-                a, b = row["src"], row["dst"]
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union by min keeps roots = component minima
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            out = [(n, find(n)) for n in parent]
-        finally:
-            edges.unpersist()
+        for a, b in zip(small.column(0).to_pylist(),
+                        small.column(1).to_pylist()):
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                # union by min keeps roots = component minima
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo
+        import pyarrow as pa
         from pyspark.sql.types import StructField, StructType
 
         node_type = pairs.schema[a_col].dataType
@@ -597,7 +590,22 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
             StructField("node", node_type, False),
             StructField("cluster_id", node_type, False),
         ])
-        return pairs.sparkSession.createDataFrame(out, schema)
+        # An Arrow table becomes a driver-side LocalRelation: the labels
+        # reach the JVM without a Python-worker stage (a list of tuples
+        # would be unpickled by Python workers in every consuming query).
+        nodes = list(parent)
+        return pairs.sparkSession.createDataFrame(
+            pa.table({"node": nodes, "cluster_id": [find(n) for n in nodes]}),
+            schema)
+
+    sym = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    edges = sym.unionByName(
+        sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct().persist()
+    stats = edges.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("src", "dst")).alias("fp")).collect()[0]
+    n_edges = stats["n"]
 
     # Truncate lineage EVERY round: persist alone caches data but the
     # logical plan still nests one join deeper per round, and Catalyst's

@@ -266,7 +266,7 @@ def minhash_sig_table(df: DataFrame, group_col: str = "source",
 
     hm = df.select(
         F.col(group_col).alias("grp"),
-        F.explode(T.shingle_hashes(T.shingles(F.col(text_col), 3)))
+        F.explode(T.shingle_hashes(text_col, 3))
         .alias("h0"))
     h = F.pmod(F.col("h0"), F.lit(T.MINHASH_P))
     rows = hm.select("grp", F.posexplode(F.array(*[

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..operators.sqltext import sql_str
+
 # ---------------------------------------------------------------------------
 # Usability gate (F1) — `core/extractor.py:34-48`
 # ---------------------------------------------------------------------------
@@ -50,14 +52,22 @@ def is_text_usable(text: Column,
 # Cleanup chain (P33/P34)
 # ---------------------------------------------------------------------------
 
+#: C0 control chars except \t \n \r.
+CONTROL_CHARS_RE = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"
+#: Runs of spaces/tabs.
+HSPACE_RE = "[ \\t]+"
+#: The whitespace-token separator.
+WS_RE = "\\s+"
+
+
 def strip_control_chars(text: Column) -> Column:
     """P34 first step: remove C0 control chars except \\t \\n \\r."""
-    return F.regexp_replace(text, "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]", "")
+    return F.regexp_replace(text, CONTROL_CHARS_RE, "")
 
 
 def collapse_whitespace(text: Column) -> Column:
     """Collapse runs of spaces/tabs, trim."""
-    return F.trim(F.regexp_replace(text, "[ \\t]+", " "))
+    return F.trim(F.regexp_replace(text, HSPACE_RE, " "))
 
 
 def clean_text(text: Column) -> Column:
@@ -78,7 +88,7 @@ def ws_tokens(text: Column) -> Column:
     """Whitespace tokens of the lowercased text ('' rows -> empty array)."""
     t = F.trim(F.lower(text))
     return F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, "\\s+")
+        F.split(t, WS_RE)
     )
 
 
@@ -611,11 +621,28 @@ def positional_grams(toks: Column, n: int, gram) -> Column:
     return bind_array(toks, _inner)
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (the near-dup feature set)."""
-    toks = ws_tokens(clean_text(text))
-    return F.array_distinct(
-        positional_grams(toks, n, lambda s: F.concat_ws(" ", s)))
+def shingles_sql(text: str, n: int = 3) -> str:
+    """Distinct word n-gram shingles (the near-dup feature set) of the
+    SQL expression ``text``, as Spark SQL text: ``clean_text`` ->
+    ``ws_tokens`` -> ``positional_grams`` joined by spaces, written out
+    with the same two codegen rules (the guard on the sequence inside
+    the gram ``transform``; the token array let-bound by a one-element
+    outer ``transform``). DuckDB twin: ``queries._sql_shingles``."""
+    clean = (f"trim(regexp_replace(regexp_replace({text}, "
+             f"{sql_str(CONTROL_CHARS_RE)}, ''), {sql_str(HSPACE_RE)}, ' '))")
+    low = f"trim(lower({clean}))"
+    toks = (f"CASE WHEN {low} = '' THEN CAST(array() AS ARRAY<STRING>) "
+            f"ELSE split({low}, {sql_str(WS_RE)}) END")
+    k = f"size(tk) - {n - 1}"
+    grams = (f"transform(CASE WHEN {k} > 0 THEN sequence(1, {k}) "
+             f"ELSE CAST(array() AS ARRAY<INT>) END, "
+             f"i -> concat_ws(' ', slice(tk, i, {n})))")
+    return f"array_distinct(element_at(transform(array({toks}), tk -> {grams}), 1))"
+
+
+def shingles(text_col: str, n: int = 3) -> Column:
+    """``shingles_sql`` of column ``text_col`` as a Column."""
+    return F.expr(shingles_sql(text_col, n))
 
 
 # MinHash family: h_i(s) = (A[i] * (base(s) mod P) + C[i]) mod P where
@@ -627,20 +654,24 @@ MINHASH_A = (1103515245, 1299721, 104729, 7919, 65537, 22695477, 48271, 69621)
 MINHASH_C = (12345, 999983, 101, 271828, 314159, 662607, 57721, 161803)
 
 
-def shingle_hashes(shingle_col: Column) -> Column:
-    """array<string> shingles -> array<long> base hashes (1 md5 each).
-    15 hex digits < 2^60 fits a signed long; DuckDB twin:
-    ``CAST('0x' || substr(md5(s),1,15) AS BIGINT)``."""
-    return F.transform(
-        shingle_col,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-    )
+def shingle_hash_sql(s: str) -> str:
+    """Base hash of the shingle ``s`` (1 md5): 15 hex digits < 2^60 fits
+    a signed long; DuckDB twin: ``CAST('0x' || substr(md5(s),1,15) AS
+    BIGINT)``."""
+    return f"CAST(conv(substring(md5({s}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def winnow_fingerprint(text: Column, n: int = 3) -> Column:
+def shingle_hashes(text_col: str, n: int = 3) -> Column:
+    """array<long> base hashes of column ``text_col``'s shingles."""
+    return F.expr(f"transform({shingles_sql(text_col, n)}, "
+                  f"s -> {shingle_hash_sql('s')})")
+
+
+def winnow_fingerprint(text_col: str, n: int = 3) -> Column:
     """Document fingerprint: lexicographic-min md5 over the shingle set
     (a 1-band minhash — the winnowing 'rolling hash' analogue)."""
-    return F.array_min(F.transform(shingles(text, n), F.md5))
+    return F.expr(f"array_min(transform({shingles_sql(text_col, n)}, "
+                  f"s -> md5(s)))")
 
 
 # SimHash (64-bit, stored as two 32-bit halves)

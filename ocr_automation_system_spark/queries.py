@@ -1534,7 +1534,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         T.content_hash(F.col("text")).alias("content_hash"),
-        T.winnow_fingerprint(F.col("text")).alias("winnow_min"),
+        T.winnow_fingerprint("text").alias("winnow_min"),
     )
 
 
@@ -4280,7 +4280,7 @@ def q_gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id",
-        T.shingle_hashes(T.shingles(F.col("text"), 5)).alias("hs"))
+        T.shingle_hashes("text", 5).alias("hs"))
     g = sh.select("doc_id", F.explode("hs").alias("h"))
     own = g.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
     oc = own.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_n_novel"))

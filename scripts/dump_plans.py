@@ -55,7 +55,15 @@ aggregation collapses each doc's shingles to an 8-long row BEFORE the
 doc_id shuffle, so the shuffle payload is n_docs x 8 longs, not the
 shingle set. Both self-join sides read the same band subtree; AQE reuses
 the exchange. The Jaccard verification joins candidates (tiny) back to
-the shingle table on doc ids — broadcast-eligible under AQE.""",
+the shingle table on doc ids — broadcast-eligible under AQE. Every
+projection reaches the JVM as Spark SQL text (text.shingles_sql and one
+selectExpr per step), so building this plan costs a few hundred py4j
+round trips. Codegen check on the executed plan (Spark 4.1.2, AQE final
+plan): the shingle Generate and the shingle Project are the only
+operators outside whole-stage codegen. Both carry transform(), which
+Spark 4.1 evaluates as CodegenFallback whatever its shape; the guard
+inside the transform and the let-bound token array keep its
+per-element work down, not the codegen stage.""",
     "simhash": """Same explode->aggregate shape as MinHash: distinct tokens explode,
 two 32-bit digest halves per token (conv on md5 hex — all codegen), then
 64 per-bit SUM aggregates + count in one hash aggregate keyed on doc_id

@@ -2,6 +2,7 @@ import os
 import sys
 import uuid
 
+import py4j.clientserver
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -48,4 +49,26 @@ def jobs_of(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count
+
+
+@pytest.fixture(scope="session")
+def py4j_calls():
+    """``py4j_calls(run)``: the py4j round trips ``run()`` makes from the
+    driver to the JVM — the cost of building a plan, not of running it."""
+    client = py4j.clientserver.JavaClient
+
+    def count(run):
+        send, calls = client.send_command, [0]
+
+        def counting(self, *args, **kwargs):
+            calls[0] += 1
+            return send(self, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            run()
+        finally:
+            client.send_command = send
+        return calls[0]
     return count

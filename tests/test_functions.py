@@ -50,6 +50,14 @@ def test_lsh_finds_near_dup_pair(docs):
     assert (0, 3) not in pairs             # unrelated never a candidate
 
 
+def test_ladder_build_is_few_py4j_calls(spark, sf_dir, py4j_calls):
+    """The LSH + Jaccard ladder reaches the JVM as Spark SQL text: building
+    it costs a few hundred py4j round trips, not the ~1,700 of the
+    ``Column`` trees it replaced."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert 0 < py4j_calls(lambda: D.ngram_jaccard_pairs(docs)) < 500
+
+
 def test_short_and_empty_docs_never_join(docs):
     bands = D.minhash_bands(docs)
     ids = {r["doc_id"] for r in bands.collect()}
@@ -66,22 +74,58 @@ def test_connected_components_chain_and_singleton(spark):
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, jobs_of):
     """Union-find (collected) and min-label propagation (distributed)
-    must return identical clusters on the same random graph."""
+    must return identical clusters on the same random graph. The driver
+    path is one collect of the pairs: one Spark job on a one-partition
+    pair set, with no count, fingerprint or edge-table job."""
     import random
 
     rng = random.Random(3)
     nodes = list(range(200))
     edges = {(min(a, b), max(a, b))
              for a, b in (rng.sample(nodes, 2) for _ in range(150))}
-    pairs = spark.createDataFrame(sorted(edges), ["doc_a", "doc_b"])
-    fast = {r["node"]: r["cluster_id"]
-            for r in D.connected_components(pairs).collect()}
+    pairs = spark.createDataFrame(sorted(edges), ["doc_a", "doc_b"]).coalesce(1)
+    built = []
+    assert jobs_of(lambda: built.append(D.connected_components(pairs))) == 1
+    # the labels are a local relation: reading them runs no Spark job
+    rows = []
+    assert jobs_of(lambda: rows.extend(built[0].collect())) == 0
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in built[0].schema.fields] == [
+        ("node", "bigint", False), ("cluster_id", "bigint", False)]
+    fast = {r["node"]: r["cluster_id"] for r in rows}
     slow = {r["node"]: r["cluster_id"]
             for r in D.connected_components(
                 pairs, collect_threshold=0).collect()}
     assert fast == slow and fast
+
+
+def test_connected_components_collects_all_partitions_in_one_job(
+        spark, jobs_of):
+    """The driver path's limit runs over every partition in one job. A
+    plain ``limit().collect()`` scans partitions in growing waves (1, 4,
+    ... per job) until the limit fills, so a pair set smaller than the
+    limit cost one job per wave (4 jobs here instead of 2). String ids
+    (urls) keep their type."""
+    from pyspark.sql import functions as F
+
+    edges = (spark.createDataFrame(
+        [(f"u{i:03d}", f"u{i + 1:03d}") for i in range(0, 160, 2)],
+        ["doc_a", "doc_b"]).repartition(8).persist())
+    try:
+        edges.count()
+        pairs = (edges.join(F.broadcast(edges.select(F.col("doc_a").alias("x"))),
+                            F.col("doc_a") == F.col("x"))
+                 .drop("x"))
+        built = []
+        # one job builds the broadcast side, one runs the limit
+        assert jobs_of(lambda: built.append(D.connected_components(pairs))) == 2
+        got = {r["node"]: r["cluster_id"] for r in built[0].collect()}
+        assert got == {f"u{n:03d}": f"u{n - n % 2:03d}" for n in range(160)}
+        assert built[0].schema["node"].dataType.simpleString() == "string"
+    finally:
+        edges.unpersist()
 
 
 def test_connected_components_long_chain_converges(spark):
@@ -466,7 +510,7 @@ def test_quality_and_tokens(docs):
 
 def test_fingerprint_stability(docs):
     fp = docs.select("doc_id", T.content_hash(F.col("text")).alias("h"),
-                     T.winnow_fingerprint(F.col("text")).alias("w")).collect()
+                     T.winnow_fingerprint("text").alias("w")).collect()
     by_id = {r["doc_id"]: r for r in fp}
     assert by_id[0]["h"] == by_id[1]["h"]
     assert by_id[0]["w"] == by_id[1]["w"]
@@ -672,17 +716,48 @@ def test_gram_lambdas_stay_bound_and_guarded(spark):
     array LET-BOUND via bind_array's one-element outer transform — a
     lambda closing over the raw tokenizer expression re-evaluates it
     per gram (measured 14x)."""
-    from pyspark.sql import functions as F
-
     from ocr_automation_system_spark.functions.text import shingles
 
-    expr = str(shingles(F.col("text"))).lower()
+    expr = (spark.createDataFrame([("a b c",)], "text string")
+            .select(shingles("text"))._jdf.queryExecution().analyzed()
+            .toString().lower())
     # bind_array shape: transform(array(<tokenizer>), ...)
     assert "transform(array(" in expr
     # lazy_seq shape: a guarded sequence feeds the gram transform ...
     assert "sequence(1" in expr
     # ... and no CASE WHEN has a transform as its THEN branch
     assert "then transform(" not in expr
+
+
+def test_shingle_sql_matches_duckdb_twin(spark):
+    """The Spark SQL shingle text and its DuckDB twin
+    (``queries._sql_shingles``) give the same shingle set on the
+    tokenizer's edge cases."""
+    import duckdb
+
+    from ocr_automation_system_spark.queries import (
+        _sql_clean, _sql_shingles, _sql_toks,
+    )
+
+    texts = ["", "   \t  ", "a\x01b\x1f c\x0bd e\x00f", "one\ttwo\t\tthree four",
+             "one two", "one two three", "a b a b a b a b",
+             "The QUICK Brown fox THE quick", "naïve Café ÜBER straße çà ñ",
+             "  lead and trail  ", "x\ny\r\nz w"]
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "id int, text string")
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE t (id INTEGER, text VARCHAR)")
+        con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+        for n in (1, 3):
+            got = {r["id"]: sorted(r["sh"]) for r in
+                   df.select("id", T.shingles("text", n).alias("sh")).collect()}
+            sql = _sql_shingles(_sql_toks(_sql_clean("text")), n)
+            want = {i: sorted(sh) for i, sh in
+                    con.execute(f"SELECT id, {sql} FROM t").fetchall()}
+            assert got == want, n
+    finally:
+        con.close()
 
 
 def test_incremental_dedup_matches_direct_and_handles_empty_index(
@@ -933,7 +1008,7 @@ def test_gram_novelty_attribution(spark, sf_dir):
     out = q_gram_novelty(spark, sf_dir).toPandas()
     docs = load_table(spark, sf_dir, "documents")
     n_distinct = (docs.select(F.explode(
-        T.shingle_hashes(T.shingles(F.col("text"), 5))).alias("h"))
+        T.shingle_hashes("text", 5)).alias("h"))
         .select("h").distinct().count())
     assert int(out["n_novel"].sum()) == n_distinct
     assert ((0.0 <= out["novelty"]) & (out["novelty"] <= 1.0)).all()

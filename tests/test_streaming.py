@@ -420,7 +420,7 @@ def test_streaming_incremental_dedup_against_static_index(spark, tmp_path):
             .select(F.col("n.doc_id").alias("new_id"),
                     F.col("c.doc_id").alias("corpus_id")))
     new_sh = stream_in.select(F.col("doc_id").alias("new_id"),
-                              shingles(F.col("text")).alias("sh_n"))
+                              shingles("text").alias("sh_n"))
     hits = (cand.join(new_sh, "new_id")
             .join(corpus_sh.select(F.col("doc_id").alias("corpus_id"),
                                    F.col("sh").alias("sh_c")), "corpus_id")

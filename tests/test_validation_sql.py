@@ -12,7 +12,6 @@ one scan, one aggregation, no window and no join."""
 import json
 
 import duckdb
-import py4j.clientserver
 import pytest
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -113,17 +112,10 @@ def test_rule_literals_are_double_not_decimal(results):
     assert "decimal" not in plan.lower()
 
 
-def test_validation_build_is_few_py4j_calls(results, monkeypatch):
-    calls = [0]
-    send = py4j.clientserver.JavaClient.send_command
-
-    def counting(self, *args, **kwargs):
-        calls[0] += 1
-        return send(self, *args, **kwargs)
-
-    monkeypatch.setattr(py4j.clientserver.JavaClient, "send_command", counting)
-    entity_report(run_rules(build_entities(results), as_of=AS_OF), generated_at=AS_OF)
-    assert 0 < calls[0] < 1000
+def test_validation_build_is_few_py4j_calls(results, py4j_calls):
+    calls = py4j_calls(lambda: entity_report(
+        run_rules(build_entities(results), as_of=AS_OF), generated_at=AS_OF))
+    assert 0 < calls < 1000
 
 
 def _extractions(spark, rows):
