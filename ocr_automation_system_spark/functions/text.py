@@ -585,12 +585,12 @@ def lazy_seq(cond: Column, start: Column, stop: Column,
 
     ALWAYS guard a window-position sequence this way — with the
     ``CASE WHEN`` on the sequence, not around the ``transform`` that
-    consumes it. A CaseWhen wrapped around a higher-order function
-    drops the whole projection out of whole-stage codegen (interpreted
-    per-row lambda eval): measured ~20x slower on the 235k-row shingle
-    stream at sf0.1. ``transform([], f)`` is the same empty result, one
-    codegen-able expression tree. The false/null branch never evaluates
-    the sequence, so a negative ``stop`` under a failed guard is safe."""
+    consumes it: the guard around the ``transform`` measured ~20x slower
+    on the 235k-row shingle stream at sf0.1. Neither shape is in
+    whole-stage codegen (every higher-order function is CodegenFallback,
+    docs/PLANS.md). ``transform([], f)`` is the same empty result. The
+    false/null branch never evaluates the sequence, so a negative
+    ``stop`` under a failed guard is safe."""
     seq = (F.sequence(start, stop) if step is None
            else F.sequence(start, stop, step))
     return F.when(cond, seq).otherwise(F.array().cast("array<int>"))
@@ -613,7 +613,7 @@ def bind_array(arr: Column, fn) -> Column:
 def positional_grams(toks: Column, n: int, gram) -> Column:
     """All n-token windows of a bound token array, mapped through
     ``gram(slice)`` — the shared shape of shingling, n-gram repetition
-    and duplicated-span streams (codegen-safe: lazy_seq + bind_array)."""
+    and duplicated-span streams (lazy_seq + bind_array)."""
     def _inner(tk: Column) -> Column:
         k = F.size(tk) - (n - 1)
         return F.transform(lazy_seq(k > 0, F.lit(1), k),
@@ -625,7 +625,7 @@ def shingles_sql(text: str, n: int = 3) -> str:
     """Distinct word n-gram shingles (the near-dup feature set) of the
     SQL expression ``text``, as Spark SQL text: ``clean_text`` ->
     ``ws_tokens`` -> ``positional_grams`` joined by spaces, written out
-    with the same two codegen rules (the guard on the sequence inside
+    with the same two rules (the guard on the sequence inside
     the gram ``transform``; the token array let-bound by a one-element
     outer ``transform``). DuckDB twin: ``queries._sql_shingles``."""
     clean = (f"trim(regexp_replace(regexp_replace({text}, "

@@ -12,6 +12,14 @@ spark-submit entry points agree. Tuned per SURVEY.md §4:
   reference's OCR-model pattern, `core/ocr_engine.py:6-11`) amortize.
 * Shuffle partitions sized for the local harness; on a real cluster this is
   set per-job (``--conf``) to ~2-3x total cores, and AQE coalesces down.
+* Parquet column chunks are written with zstd at its default level, not
+  Spark's default snappy: every Parquet table the package writes (the
+  resumable extraction commit, the validation and curation sinks, the
+  connected-components checkpoints, the streaming file sinks) stores the
+  same rows in about a quarter fewer bytes at no measured cost in time,
+  and Spark, pyarrow and DuckDB all read it. Frames written by pandas or
+  pyarrow directly (``corpus.write_corpus``, the oracle's golden files)
+  keep pyarrow's own default.
 """
 
 from __future__ import annotations
@@ -88,6 +96,7 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

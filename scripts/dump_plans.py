@@ -45,9 +45,13 @@ hash exchange, final aggregate. It is a sort aggregate because a struct
 min buffer is not fixed-width; keys are near-unique PANs, so the shuffle
 is uniform and the partial aggregate has little to merge. No window, no join. The rules stage
 adds NO exchange: three projections over the entity row (shared bindings,
-one struct column per rule CASE, then inline of the rule rows), which
-whole-stage codegen fuses into one stage, and entity_report's groupBy on
-entity_key reuses the aggregation's hash partitioning.""",
+one struct column per rule CASE, then inline of the rule rows) in the
+aggregation's stage, and entity_report's groupBy on entity_key reuses the
+aggregation's hash partitioning. In the executed plan the from_json
+Filter and Projects and the rule-CASE Project run outside whole-stage
+codegen, because from_json and the rules' exists() are CodegenFallback,
+and so do both sort aggregates (see Higher-order-function codegen
+cliffs); the bindings Project and the inline Generate are codegen'd.""",
     "lsh_pairs": """The LSH band join shuffles on (band, sig) — the signature, never the
 document text. Signature computation is explode -> md5 -> 8 MIN
 aggregates in ONE whole-stage-codegen hash aggregate: map-side partial

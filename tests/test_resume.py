@@ -248,3 +248,47 @@ def test_cc_checkpoints_invalidate_when_input_changes(spark, tmp_path):
     assert out2 == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10}
     second = [d for d in os.listdir(ckpt) if d.startswith("cc-")]
     assert len(second) == 1 and second != first  # stale subdir pruned
+
+
+def test_commit_and_sinks_write_zstd_parquet(spark, docs, tmp_path):
+    """The session writes every Parquet column chunk with zstd: the
+    resumable commit and the four crawl sinks all report ZSTD, and
+    DuckDB reads each table back to the row count Spark sees."""
+    import glob
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from ocr_automation_system_spark.operators.adapters import (
+        build_entities, checksum_consistency_check, duplicate_id_check,
+    )
+    from ocr_automation_system_spark.operators.report import entity_report
+    from ocr_automation_system_spark.operators.rules import run_rules
+    from ocr_automation_system_spark.sources.catalog import write_results
+
+    out = str(tmp_path / "crawl")
+    run_resumable_extraction(spark, docs, out, n_buckets=2)
+    results = read_extractions(spark, out)
+    validation = run_rules(build_entities(results))
+    sinks = {
+        "validation_results": validation,
+        "entity_reports": entity_report(validation),
+        "duplicate_ids": duplicate_id_check(results),
+        "checksum_checks": checksum_consistency_check(results),
+    }
+    for name, df in sinks.items():
+        write_results(df, os.path.join(out, name))
+
+    tables = {"extractions": "extractions/bucket=*"} | {n: n for n in sinks}
+    for name, sub in tables.items():
+        parts = sorted(glob.glob(os.path.join(out, sub, "part-*.parquet")))
+        assert parts, name
+        codecs = {md.row_group(g).column(c).compression
+                  for md in (pq.ParquetFile(p).metadata for p in parts)
+                  for g in range(md.num_row_groups)
+                  for c in range(md.num_columns)}
+        assert codecs == {"ZSTD"}, (name, codecs)
+        want = spark.read.parquet(os.path.join(out, name)).count()
+        got = duckdb.sql(
+            f"SELECT count(*) FROM read_parquet({parts!r})").fetchone()[0]
+        assert got == want, (name, got, want)
